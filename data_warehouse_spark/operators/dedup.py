@@ -417,13 +417,16 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                   # prefilter); checkpoint so the banding join runs
                   # once — candidates are the tiny near-dup tail, so
                   # the materialization is cheap at any corpus size.
-                  # eager=False keeps plan construction lazy (no job
-                  # until an action runs). Fault-tolerance trade, as in
-                  # graph.py: checkpoint blocks are executor-local with
-                  # no lineage replay, so losing an executor mid-query
-                  # fails the job (re-run) instead of recomputing — the
-                  # blocks here are only the candidate tail, so re-runs
-                  # are cheap relative to protecting them
+                  # eager=False defers the checkpoint to the first job
+                  # over it, but that job still runs at construction:
+                  # the broadcast size gate below counts the candidates
+                  # before this function returns. Fault-tolerance
+                  # trade, as in graph.py: checkpoint blocks are
+                  # executor-local with no lineage replay, so losing an
+                  # executor mid-query fails the job (re-run) instead
+                  # of recomputing — the blocks here are only the
+                  # candidate tail, so re-runs are cheap relative to
+                  # protecting them
                   .localCheckpoint(eager=False))
 
     # exact verify: Jaccard over distinct shingles — computed ONLY for

@@ -10,7 +10,9 @@ batches of 2) accrete small files that degrade every later scan.
 Both operators follow merge_into_partitioned's discipline
 (operators/merge.py): touched-partition discovery first, then a
 dynamic-partition-overwrite rewrite of ONLY those partitions —
-O(affected days), never O(table).
+O(affected days), never O(table) — through the same writer,
+merge.overwrite_partitions, so a rewritten partition has one layout
+whichever operator rewrote it.
 """
 
 from __future__ import annotations
@@ -18,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_warehouse_spark.operators.merge import target_exists
+from data_warehouse_spark.operators.merge import (
+    overwrite_partitions, target_exists,
+)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -36,7 +40,9 @@ def delete_by_keys(spark: SparkSession, target_path: str,
        projection against the key list — column-pruned scan, the only
        full-table read, carrying just the partition column + keys;
     2. kept = those partitions' rows anti-joined against the keys;
-    3. dynamic-partition-overwrite write of `kept`.
+    3. dynamic-partition-overwrite write of `kept`, one key-sorted
+       file per rewritten partition at small sizes
+       (merge.overwrite_partitions).
 
     A partition whose every row is deleted VANISHES from `kept`, and
     dynamic overwrite only replaces partitions present in the output —
@@ -86,9 +92,7 @@ def delete_by_keys(spark: SparkSession, target_path: str,
     # are gone and re-executing it would chase deleted parquet parts)
     surviving = {r[dt_col] for r in
                  kept.select(dt_col).distinct().collect()}
-    (kept.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(dt_col).parquet(target_path))
+    overwrite_partitions(kept, target_path, keys=keys, dt_col=dt_col)
     kept.unpersist()
 
     fs, _ = _fs(spark, target_path)
@@ -109,19 +113,16 @@ def compact_partitions(spark: SparkSession, target_path: str,
     few files as its size needs — one read + one dynamic-partition-
     overwrite write; row content is untouched.
 
-    The repartition hashes on the partition column, so each date's rows
-    collapse into one write task -> one file per partition (parquet's
-    maxRecordsPerFile still splits genuinely huge partitions). This is
-    the periodic OPTIMIZE a micro-batched sink needs: the reference
-    commits batches of 2 rows (air_lambda.py:90-98); at warehouse scale
-    every such commit is a file, and scan cost grows with file count
-    until a compaction folds them.
+    The write goes through merge.overwrite_partitions: one file per
+    date, split into bounded files only when a date outgrows AQE's
+    advisory partition size. This is the periodic OPTIMIZE a
+    micro-batched sink needs: the reference commits batches of 2 rows
+    (air_lambda.py:90-98); at warehouse scale every such commit is a
+    file, and scan cost grows with file count until a compaction folds
+    them.
     """
     target = spark.read.parquet(target_path)
     if dates is not None:
         target = target.filter(F.col(dt_col).isin(dates))
-    (target.repartition(F.col(dt_col))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(dt_col).parquet(target_path))
+    overwrite_partitions(target, target_path, dt_col=dt_col)
     spark.catalog.refreshByPath(target_path)

@@ -16,10 +16,14 @@ engine provides the standard two rewrites:
 At 100 TB the upsert writes via dynamic partition overwrite: only the
 date partitions containing changed keys rewrite (the reference's
 24h-window re-run maps to exactly one or two partitions), not the
-whole table.
+whole table. Every such rewrite — the merge here and the maintenance
+operators' delete and compaction — goes through overwrite_partitions,
+so the on-disk layout of a rewritten partition is decided once.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -61,6 +65,11 @@ def upsert(old: DataFrame, new: DataFrame, keys: list[str],
         new = dedup_latest(new, keys, order_col)
     elif not new_unique:
         new = new.dropDuplicates(keys)
+    # `new` is key-unique from here on (deduplicated above, or by the
+    # caller's new_unique claim), so its key projection is already the
+    # anti-join's one-row-per-key build side: a distinct on it would
+    # only cost an exchange and two aggregates (the optimizer drops it
+    # after dropDuplicates but cannot see through dedup_latest's window).
     # null-safe anti join: a NULL key is one key value under the PK
     # contract (dropDuplicates above already treats it so); a plain
     # equi anti-join would never match NULL=NULL and keep the old
@@ -69,13 +78,7 @@ def upsert(old: DataFrame, new: DataFrame, keys: list[str],
     # one scan), and unqualified old[k]/nk[k] would lean on the
     # analyzer's self-join plan-id disambiguation (correct, but it
     # logs "trivially true equals predicate" on every run).
-    nk = new.select(*[_qcol(k) for k in keys])
-    if not new_unique:
-        # reduce the anti-join's build side to one row per key; under
-        # new_unique the distinct is an identity and only costs its
-        # exchange + two aggregates, so skip it
-        nk = nk.distinct()
-    nk = nk.alias("__upsert_new")
+    nk = new.select(*[_qcol(k) for k in keys]).alias("__upsert_new")
     old_a = old.alias("__upsert_old")
     cond = [_qcol(k, "__upsert_old").eqNullSafe(_qcol(k, "__upsert_new"))
             for k in keys]
@@ -279,14 +282,17 @@ def merge_into_partitioned(spark, target_path: str, new: DataFrame,
     1. the affected dates are computed from `new` (a tiny distinct);
     2. only those partitions of the target are read back (partition
        pruning — O(days touched), not O(table));
-    3. upsert(old_slice, new) writes back with dynamic partition
-       overwrite, so untouched partitions' files are never rewritten.
+    3. upsert(old_slice, new) writes back through overwrite_partitions
+       (dynamic partition overwrite), so untouched partitions' files
+       are never rewritten, and each rewritten date lands as one file
+       sorted by `keys` (split only when a date outgrows AQE's advisory
+       partition size).
 
     This is the reference's idempotent 24h-window re-run
     (trips_lambda.py:186-206,218-221) at warehouse scale: a daily batch
     rewrites one or two partitions of an arbitrarily large fact table.
-    Requires spark.sql.sources.partitionOverwriteMode=dynamic (set here
-    per-write via the DataFrameWriter option).
+    Requires spark.sql.sources.partitionOverwriteMode=dynamic (set
+    per-write by overwrite_partitions via the DataFrameWriter option).
 
     PRECONDITION — keys must determine the date: a key's corrected
     version must land on the SAME dt as its stored version, because
@@ -334,9 +340,31 @@ def merge_into_partitioned(spark, target_path: str, new: DataFrame,
         # one row, not persist both until the key is re-delivered.
         merged = dedup_latest(new_dt, keys, ts_col)
 
-    (merged.write.mode("overwrite")
+    overwrite_partitions(merged, target_path, keys=keys)
+
+
+def overwrite_partitions(df: DataFrame, path: str, keys: Sequence[str] = (),
+                         dt_col: str = "dt") -> None:
+    """Dynamic-partition overwrite of every `dt_col` partition present
+    in `df`, each written compactly and sorted by `keys`; partitions
+    absent from `df` keep their files.
+
+    The rebalance hint adds one exchange on `dt_col` whose partitions
+    AQE sizes at runtime: small ones coalesce, so a rewritten date
+    lands in ONE file instead of one per upstream shuffle partition
+    (each parquet file carries a ~2 KB footer, which outweighs a small
+    merge batch's rows), while a date above the advisory partition
+    size splits into bounded files — no single task ever holds a whole
+    huge day, as repartition(dt_col) would force. Sorting each task's
+    rows by (dt_col, *keys) also satisfies the partitioned writer's
+    own dt ordering, so the writer adds no sort of its own; the key
+    order gives readers of a partition tight parquet min/max stats on
+    the keys."""
+    (df.hint("rebalance", dt_col)
+     .sortWithinPartitions(dt_col, *[_qcol(k) for k in keys])
+     .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("dt").parquet(target_path))
+     .partitionBy(dt_col).parquet(path))
 
 
 def target_exists(spark, path: str) -> bool:

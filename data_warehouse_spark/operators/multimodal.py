@@ -108,6 +108,11 @@ def attach_png_blob(df: DataFrame, text_col: str = "text",
                                         "media_type string, n_bytes long"))
 
 
+# Version of png_blob_table's landed columns; bump it whenever they
+# change. v2 added `hdr` (r17).
+PNG_BLOB_LAYOUT = 2
+
+
 def png_blob_table(spark, sf_dir: str,
                    base: str | None = None) -> DataFrame:
     """Process-persistent PNG payload side table: attach_png_blob's
@@ -136,7 +141,12 @@ def png_blob_table(spark, sf_dir: str,
     parquet scan's ReadSchema drops `blob` entirely. Storing codec
     metadata beside an opaque payload at ingest is the standard media-
     table layout; the bytes are identical to substring(blob, 1, 33)
-    computed at read time, so results are unchanged by construction."""
+    computed at read time, so results are unchanged by construction.
+
+    The cache key also folds in PNG_BLOB_LAYOUT, so a persistent
+    `base` never serves a table landed under an older column layout
+    (one from before `hdr` existed would fail every header-only
+    reader)."""
     import hashlib
     import os
 
@@ -146,7 +156,8 @@ def png_blob_table(spark, sf_dir: str,
         from data_warehouse_spark.scratch import process_dir
         base = process_dir("dw_spark_png")
     mtime = int(os.path.getmtime(f"{sf_dir}/documents.parquet"))
-    digest = hashlib.md5(f"{sf_dir}|{mtime}".encode()).hexdigest()[:8]
+    digest = hashlib.md5(
+        f"{sf_dir}|{mtime}|{PNG_BLOB_LAYOUT}".encode()).hexdigest()[:8]
     path = f"{base}/{digest}/png_blobs.parquet"
     if not os.path.exists(f"{path}/_SUCCESS"):
         attach_png_blob(load_table(spark, sf_dir, "documents")) \

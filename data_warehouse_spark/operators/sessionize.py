@@ -35,12 +35,15 @@ def with_session_id(df: DataFrame, key: str, ts: str, gap_seconds: float,
     window simplification.
 
     ``gap_closed=True`` breaks on gap >= gap_seconds instead of > —
-    the boundary convention of Spark's session_window (its window end
-    is exclusive at last_event + gap), so a lag-chain built with it
-    assigns exactly session_window's groups (r17: st4 computes its
-    session aggregate through this form — identical rows, ~10-20%
-    faster at 64x/256x than the native batch operator on this data
-    shape; see OPTIMIZATION_r17.md).
+    st4's convention and its DuckDB oracle's (r17: st4 computes its
+    session aggregate through this form, ~10-20% faster at 64x/256x
+    than the native batch operator on this data shape; see
+    OPTIMIZATION_r17.md). It is NOT Spark's session_window convention
+    at an exact-gap tie: session_window merges touching windows, so an
+    event exactly gap_seconds after the previous one stays in its
+    session, as under the default strict >. Without such ties (the
+    events fixture has none) both modes assign session_window's groups;
+    tests/test_sessionize.py pins both facts.
     """
     order_cols = [ts] + ([order_tiebreak] if order_tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order_cols)

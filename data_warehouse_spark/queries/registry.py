@@ -77,10 +77,17 @@ _QUERY_MODULES = [
 #       scd2_apply was rewritten, measured, and REVERTED mid-round
 #       (the split lost its A/Bs — OPTIMIZATION_r17.md #3), and the
 #       churned operator earns driver re-verification.
+#       Then the 12 queries changed since by the compact merge writes
+#       (upsert's build side, the shared overwrite_partitions writer
+#       behind merge_into_partitioned / delete_by_keys) and
+#       read_events_stream's glob parameter: e4/u1/u9/u9b and st7
+#       (upsert, merge), u5 (delete), st1/st6/st8/st9/st10/st11 (the
+#       events stream source). u6 (compaction) and mm2 (png cache key)
+#       changed too and were already windowed.
 #   (c) r14-cohort backfill, stale-first per tools/rotation.py:
-#       the first 17 of the 39 r14-dated rows in rotation order.
-# 22 + 11 + 17 = 50. The 22 r14 rows displaced by the budget (lead
-# the r18 window per the standing rule) start at mm1_multimodal_stub
+#       the first 5 of the 39 r14-dated rows in rotation order.
+# 22 + 23 + 5 = 50. The 34 r14 rows displaced by the budget (lead
+# the next window per the standing rule) start at udf4_udtf_words
 # in the rotation.py stale-first order.
 DRIVER_WINDOW = [
     # (a) the 22 r13-dated rows — oldest cohort re-enters first
@@ -96,13 +103,14 @@ DRIVER_WINDOW = [
     "mm2_image_resize", "x2_minhash_lsh", "x2c_ngram_jaccard",
     "x2d_cosine_lsh", "x2f_minhash_sparse", "x2g_incremental_minhash",
     "x8_dup_components", "x12_dedup_corpus",
-    # (c) r14-cohort backfill (stale-first; 17 of 39)
+    # (b) compact merge writes + read_events_stream glob
+    "e4_daily_run", "u1_upsert", "u9_time_travel", "u9b_snapshot_diff",
+    "st7_foreach_upsert", "u5_delete_keys", "st1_stream_source",
+    "st6_stream_dedup", "st8_custom_stateful", "st9_stream_stream_join",
+    "st10_stream_static_join", "st11_dedup_retries",
+    # (c) r14-cohort backfill (stale-first; 5 of 39)
     "dq1_validation_report", "dq1b_validation_sketch", "u6_compaction",
-    "u3_microbatch_write", "udf3_grouped_pandas", "udf4_udtf_words",
-    "j9_spatial_join", "x1_exact_dedup", "x2e_incremental_dedup",
-    "x14_token_budget_sample", "x14b_token_budget_scalable",
-    "x5_text_stats", "x5b_lang_id", "x5c_quality_score",
-    "x6_token_freq", "x7_tfidf", "x10_repetition_filter",
+    "u3_microbatch_write", "udf3_grouped_pandas",
 ]
 # As of round 9 EVERY registry query carries a DuckDB value oracle.
 # Queries added or code-changed DURING round 17 must be appended to

@@ -111,13 +111,15 @@ SELECT MIN(ts) AS sess_start,
        {money_sum_sql('value')} AS sum_value
 FROM ids GROUP BY user_id, sid
 """,
-    doc="ST4: session-window aggregate with session_window SEMANTICS "
-        "(gap >= threshold breaks — window end is exclusive at "
-        "last_event + gap — vs W5's strict >; both semantics are "
-        "offered). r17: computed through the lag-chain "
+    doc="ST4: session-window aggregate breaking on gap >= threshold "
+        "(vs W5's strict >; both semantics are offered). Native "
+        "session_window breaks on strict > too (touching windows "
+        "merge), so the two differ only at an exact-gap tie, which the "
+        "events fixture lacks (tests/test_sessionize.py pins both). "
+        "r17: computed through the lag-chain "
         "(with_session_id gap_closed=True) instead of the native "
-        "batch session_window operator — identical rows (the oracle "
-        "IS the lag-chain SQL), but the native form runs "
+        "batch session_window operator — the oracle IS the lag-chain "
+        "SQL, and the native form runs "
         "UpdatingSessionsIterator with a sort on BOTH sides of its "
         "exchange and shuffles struct-headed partial-session rows, "
         "which on this data shape (median inter-event gap ~7.5h > the "

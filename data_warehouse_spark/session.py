@@ -57,16 +57,16 @@ def default_master() -> str:
 
 
 def default_driver_mem() -> str:
-    """Driver heap default: min(48g, ~40% of MemTotal), floor 2g.
+    """Driver heap default: ~40% of MemTotal, capped at 48g, floor 2g.
 
     local[N] runs every task in the one driver JVM, so the heap is the
-    whole executor budget: at 8g a 614M-row bucketed write (32 parallel
-    sorters) OOMs before spill kicks in, hence 48g on this 128 GiB box
-    (leaves room for the OS page cache and a DuckDB peer; ~1.5g per
-    task slot — a real cluster expresses the same budget per executor).
-    Capping at 40% of physical RAM keeps smaller hosts from being
-    OOM-killed by the OS at a hard-coded Xmx they can't back; override
-    with SPARK_GRAFT_DRIVER_MEM."""
+    whole executor budget. The share follows the host: 40% leaves the
+    rest for the OS page cache, the Python workers and a DuckDB peer
+    (on a 16 GiB, 4-core host that is 6g, ~1.5g per task slot — a real
+    cluster expresses the same budget per executor). The 48g cap is
+    what a 32-slot local run needs: at 8g a 614M-row bucketed write
+    (32 parallel sorters) OOMs before spill kicks in. Override with
+    SPARK_GRAFT_DRIVER_MEM."""
     try:
         with open("/proc/meminfo") as fh:
             kb = int(next(l for l in fh if l.startswith("MemTotal")).split()[1])

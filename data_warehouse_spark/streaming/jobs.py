@@ -52,25 +52,31 @@ def read_documents_stream(spark: SparkSession, sf_dir: str,
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files: int = 1) -> DataFrame:
+                       max_files: int = 1,
+                       glob: str = "events.parquet") -> DataFrame:
     """ST1: streaming file source over the events log (the reference's
     poll loop). maxFilesPerTrigger=1 emulates snapshot-at-a-time arrival.
 
-    Streaming sources need an explicit schema, so peek at the fixture
-    file with a batch read to learn which physical ts encoding this
-    fixture generation shipped (TIMESTAMP(NANOS)->long under the legacy
-    conf, or TIMESTAMP(MICROS) NTZ), then normalize to plain TIMESTAMP
-    exactly like io.load_table so every streaming job sees the same
-    event-time column as the batch plans."""
-    ts_type = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
+    The default glob picks the events log out of a fixture dir; pass
+    e.g. glob="*.parquet" over a directory of staged event files to
+    stream them one file per trigger, as read_documents_stream does.
+
+    Streaming sources need an explicit schema, so peek at one file the
+    glob matches with a batch read to learn which physical ts encoding
+    this fixture generation shipped (TIMESTAMP(NANOS)->long under the
+    legacy conf, or TIMESTAMP(MICROS) NTZ), then normalize to plain
+    TIMESTAMP exactly like io.load_table so every streaming job sees
+    the same event-time column as the batch plans."""
+    ts_type = dict(spark.read.parquet(_first_match(spark, sf_dir, glob))
+                   .dtypes)["ts"]
     ts_decl = {"bigint": "long", "timestamp_ntz": "timestamp_ntz"}.get(
         ts_type, "timestamp")
     raw = (spark.readStream.format("parquet")
            .schema(EVENTS_SCHEMA.replace("ts timestamp", f"ts {ts_decl}"))
            .option("maxFilesPerTrigger", max_files)
            # file stream sources take a directory; the glob filter picks
-           # out the events log from the fixture dir
-           .option("pathGlobFilter", "events.parquet")
+           # out the event files from it
+           .option("pathGlobFilter", glob)
            .load(f"{sf_dir}/"))
     if ts_type == "bigint":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -87,6 +93,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
                 "spark.sql.session.timeZone=UTC")
         return raw.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
     return raw
+
+
+def _first_match(spark: SparkSession, dir_path: str, glob: str) -> str:
+    """Path of the first file in `dir_path` whose name matches `glob` —
+    Hadoop glob syntax, the same matcher pathGlobFilter applies to the
+    stream's listing. Fails loudly when nothing matches."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(f"{dir_path}/{glob}")
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    matches = sorted(st.getPath().toString()
+                     for st in (fs.globStatus(hpath) or []) if st.isFile())
+    if not matches:
+        raise FileNotFoundError(f"no file matches {glob!r} in {dir_path}")
+    return matches[0]
 
 
 def tumbling_counts(events: DataFrame, size: str = "1 day",

@@ -29,7 +29,8 @@ def test_delete_by_keys_scoped_rewrite(spark, sf_dir, tmp_path):
     target = str(tmp_path / "fact")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    write_partitioned(ev, target, ts_col="ts")
+    # several files per date, so the rewrite reads through several tasks
+    write_partitioned(ev.repartition(4), target, ts_col="ts")
 
     # doom EVERY event of one day (that partition must vanish) plus a
     # few events of a second day (that partition rewrites; the rest
@@ -58,6 +59,10 @@ def test_delete_by_keys_scoped_rewrite(spark, sf_dir, tmp_path):
     untouched = [d for d in before
                  if d in after and before[d] == after[d]]
     assert untouched, "every partition was rewritten — not a scoped delete"
+    # the partially-doomed day was rewritten, as one compact file
+    rewritten = [d for d in after if after[d] != before.get(d)]
+    assert rewritten == [f"dt={b_day}"], rewritten
+    assert len(after[f"dt={b_day}"]) == 1, after[f"dt={b_day}"]
 
 
 def test_delete_by_keys_noop_on_absent_keys(spark, sf_dir, tmp_path):

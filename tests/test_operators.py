@@ -536,7 +536,9 @@ def test_merge_into_partitioned_rewrites_only_touched_partitions(spark, sf_dir, 
     target = str(tmp_path / "fact")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    write_partitioned(ev, target, ts_col="ts")
+    # fragmented target (several unsorted files per date), so the merge
+    # reads the touched date back through several tasks
+    write_partitioned(ev.repartition(4), target, ts_col="ts")
 
     def file_states(root):
         out = {}
@@ -561,6 +563,13 @@ def test_merge_into_partitioned_rewrites_only_touched_partitions(spark, sf_dir, 
                      if p in after and before[p] != after[p]}
     # only the dt=2024-01-10 partition directory was rewritten
     assert changed_dirs and all(d.endswith("dt=2024-01-10") for d in changed_dirs), changed_dirs
+    # ... and it was rewritten compactly: one parquet file, its rows in
+    # key order (not one file per upstream shuffle partition)
+    import pyarrow.parquet as pq
+    day_files = [p for p in after if os.path.dirname(p).endswith("dt=2024-01-10")]
+    assert len(day_files) == 1, day_files
+    ids = pq.read_table(day_files[0], columns=["event_id"]).column(0).to_pylist()
+    assert ids == sorted(ids) and len(ids) > 1
 
     # merged values took effect, row count unchanged (pure update)
     back = spark.read.parquet(target)

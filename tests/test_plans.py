@@ -231,6 +231,19 @@ def test_u7_rollup_merge_never_rescans_history(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_upsert_order_col_anti_join_build_side_has_no_aggregate(spark):
+    # with order_col, dedup_latest already leaves one row per key, so
+    # the anti join's build side is the batch's key projection as is:
+    # no distinct (exchange + partial/final aggregate) on any merge
+    from data_warehouse_spark.operators.merge import upsert
+    old = spark.range(100).selectExpr("id AS k", "id AS ts", "'old' AS v")
+    new = spark.range(50, 150).selectExpr("id AS k", "id + 1000 AS ts",
+                                          "'new' AS v")
+    plan = executed_plan(upsert(old, new, keys=["k"], order_col="ts"))
+    assert "LeftAnti" in plan
+    assert plan.count("Aggregate") == 0, plan
+
+
 def test_x11_redaction_stays_in_codegen(spark):
     # the scrub is chained regexp_replace projections: no Python
     # evaluation anywhere in the plan

@@ -9,11 +9,12 @@ from data_warehouse_spark.queries.registry import DRIVER_WINDOW, load_all
 # Round-17 window (standing stale-first + changed-query-first rules):
 # the full 22-row r13 cohort first (oldest last-green per
 # tools/rotation.py), then the 11 round-17 code-changed queries (the
-# fingerprint diff vs the r16 round boundary), then r14-cohort
-# backfill to 50. Composition rationale lives next to DRIVER_WINDOW
-# in queries/registry.py; the "every changed query is windowed" half
-# is machine-checked by tests/test_window_integrity.py and the
-# staleness half is generated by tools/rotation.py from the
+# fingerprint diff vs the r16 round boundary) and the 12 queries the
+# compact merge writes and read_events_stream's glob changed since,
+# then r14-cohort backfill to 50. Composition rationale lives next to
+# DRIVER_WINDOW in queries/registry.py; the "every changed query is
+# windowed" half is machine-checked by tests/test_window_integrity.py
+# and the staleness half is generated by tools/rotation.py from the
 # CORRECTNESS_r*.json archive.
 MUST_BE_WINDOWED = {
     # (a) the 22 r13-dated rows (the oldest cohort, whole)
@@ -33,13 +34,15 @@ MUST_BE_WINDOWED = {
     "mm2_image_resize", "x2_minhash_lsh", "x2c_ngram_jaccard",
     "x2d_cosine_lsh", "x2f_minhash_sparse", "x2g_incremental_minhash",
     "x8_dup_components", "x12_dedup_corpus",
-    # (c) r14-cohort backfill (stale-first, first 17)
+    # (b) compact merge writes (upsert, overwrite_partitions behind the
+    # merge and delete) + read_events_stream's glob
+    "e4_daily_run", "u1_upsert", "u9_time_travel", "u9b_snapshot_diff",
+    "st7_foreach_upsert", "u5_delete_keys", "st1_stream_source",
+    "st6_stream_dedup", "st8_custom_stateful", "st9_stream_stream_join",
+    "st10_stream_static_join", "st11_dedup_retries",
+    # (c) r14-cohort backfill (stale-first, first 5)
     "dq1_validation_report", "dq1b_validation_sketch", "u6_compaction",
-    "u3_microbatch_write", "udf3_grouped_pandas", "udf4_udtf_words",
-    "j9_spatial_join", "x1_exact_dedup", "x2e_incremental_dedup",
-    "x14_token_budget_sample", "x14b_token_budget_scalable",
-    "x5_text_stats", "x5b_lang_id", "x5c_quality_score",
-    "x6_token_freq", "x7_tfidf", "x10_repetition_filter",
+    "u3_microbatch_write", "udf3_grouped_pandas",
 }
 
 

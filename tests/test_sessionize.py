@@ -3,6 +3,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from data_warehouse_spark.operators.sessionize import sessionize, with_session_id
 
@@ -52,3 +53,50 @@ def test_sessionize_invariant_gaps_bounded(spark, sf_dir):
     assert len(out) > 0
     for r in out:
         assert r.duration_sec <= (r.n_events - 1) * 14400
+
+
+def _session_groups(df, key_cols):
+    return {frozenset(r.ids) for r in
+            df.groupBy(*key_cols)
+            .agg(F.collect_set("event_id").alias("ids")).collect()}
+
+
+def test_gap_closed_session_ids_match_session_window(spark, sf_dir):
+    """st4 computes its session aggregate through
+    with_session_id(gap_closed=True) instead of Spark's session_window;
+    on the events fixture the two group every event identically. They
+    part only at an exact-gap tie, pinned here too: session_window
+    merges touching windows, so an event exactly one gap after the last
+    one EXTENDS its session (like the default strict > break), while
+    gap_closed=True starts a new one. The fixture has no such tie, so
+    st4's rows are session_window's rows on it."""
+    from data_warehouse_spark.io import load_table
+
+    gap = 4 * 3600
+    ev = (load_table(spark, sf_dir, "events")
+          .filter(F.col("ts").isNotNull()).select("event_id", "user_id", "ts"))
+    native = _session_groups(
+        ev.withColumn("sess", F.session_window("ts", "4 hours")),
+        ["user_id", "sess"])
+    chained = _session_groups(
+        with_session_id(ev, key="user_id", ts="ts", gap_seconds=gap,
+                        gap_closed=True), ["user_id", "session_id"])
+    assert chained == native and len(native) > 1
+
+    t0 = dt.datetime(2030, 1, 1)
+    tie = spark.createDataFrame(
+        [(1, 1, t0), (2, 1, t0 + dt.timedelta(seconds=gap)),
+         (3, 2, t0), (4, 2, t0 + dt.timedelta(seconds=gap, microseconds=1))],
+        "event_id long, user_id long, ts timestamp")
+    native = _session_groups(
+        tie.withColumn("sess", F.session_window("ts", "4 hours")),
+        ["user_id", "sess"])
+    assert native == {frozenset({1, 2}), frozenset({3}), frozenset({4})}
+    for gap_closed, want in ((False, native),
+                             (True, {frozenset({1}), frozenset({2}),
+                                     frozenset({3}), frozenset({4})})):
+        got = _session_groups(
+            with_session_id(tie, key="user_id", ts="ts", gap_seconds=gap,
+                            gap_closed=gap_closed),
+            ["user_id", "session_id"])
+        assert got == want, gap_closed

@@ -234,6 +234,26 @@ def test_mm2_scan_prunes_blob_column(spark):
     assert bad == 0
 
 
+def test_png_blob_table_never_serves_a_pre_hdr_cache(spark, tmp_path):
+    """A persistent base may still hold a table landed before the `hdr`
+    column existed, under the old (sf_dir, mtime) digest: the layout
+    version in the cache key must route around it, not serve it."""
+    import hashlib
+    import os
+
+    from data_warehouse_spark.operators.multimodal import png_blob_table
+
+    mtime = int(os.path.getmtime(f"{SF}/documents.parquet"))
+    old = hashlib.md5(f"{SF}|{mtime}".encode()).hexdigest()[:8]
+    stale = spark.createDataFrame([(1, b"x", "image/png", 1)],
+                                  "doc_id long, blob binary, "
+                                  "media_type string, n_bytes long")
+    stale.write.parquet(str(tmp_path / old / "png_blobs.parquet"))
+
+    tbl = png_blob_table(spark, SF, base=str(tmp_path))
+    assert "hdr" in tbl.columns and tbl.count() > 1
+
+
 def test_decode_images_stub_prunes_blob_via_n_bytes_col(spark):
     """The stub codec's dims are a pure function of payload length;
     when the source table already carries n_bytes (attach_blob /

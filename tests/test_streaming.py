@@ -58,6 +58,28 @@ def test_st6_streaming_dedup(spark, sf_dir):
     assert n_stream == ev.dropDuplicates(["user_id", "ts"]).count()
 
 
+def test_st1_events_stream_glob_streams_staged_files_one_per_trigger(
+        spark, sf_dir, tmp_path):
+    """read_events_stream's glob widens the source from the fixture's
+    single events log to a directory of staged event files: with
+    maxFilesPerTrigger=1 the files arrive over several micro-batches,
+    and together they carry exactly the batch table's rows."""
+    ev = load_table(spark, sf_dir, "events")
+    staged = str(tmp_path / "events_staged")
+    ev.repartition(3).write.parquet(staged)
+
+    stream = read_events_stream(spark, staged, glob="*.parquet")
+    q = start_memory_sink(stream.select("event_id", "ts"), "t_st1_glob",
+                          "append")
+    q.awaitTermination()
+    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    assert n_batches > 1, "staged 3 files but ran a single batch"
+    streamed = sorted(map(tuple, spark.sql("SELECT * FROM t_st1_glob")
+                          .collect()))
+    assert streamed == sorted(map(tuple, ev.select("event_id", "ts")
+                                  .collect()))
+
+
 def test_st7_foreach_batch_upsert(spark, sf_dir):
     target = tempfile.mkdtemp(prefix="dws_st7_")
     shutil.rmtree(target, ignore_errors=True)

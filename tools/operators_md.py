@@ -136,16 +136,18 @@ SCALE_NOTES = {
         "hash join, never BNL (plan-asserted)",
     "maintenance.delete_by_keys":
         "rewrites only partitions containing doomed rows (pruned scan "
-        "+ dynamic overwrite); O(touched), not O(table)",
+        "+ overwrite_partitions): one key-sorted file each; "
+        "O(touched), not O(table)",
     "maintenance.compact_partitions":
-        "one read + one dynamic-partition-overwrite per compacted "
-        "partition; byte-identical content (tested)",
+        "one read + overwrite_partitions: one file per date, AQE-split "
+        "only above the advisory size (never one task per huge day); "
+        "row content untouched (tested)",
     "merge.upsert":
         "key-join algebra, shuffles keys not payloads where possible; "
         "last-writer-wins deterministic via order_col",
     "merge.dedup_latest":
-        "window-free max-struct per key — single shuffle, map-side "
-        "combine",
+        "row_number()=1 over a per-key window — one shuffle on the "
+        "keys, no driver state",
     "merge.dedup_by_key":
         "dropDuplicates — Spark's native partial-agg dedup",
     "merge.scd2_apply":
@@ -155,9 +157,13 @@ SCALE_NOTES = {
         "merges pre-aggregated deltas — nightly cost O(delta), "
         "history never rescanned (plan-asserted)",
     "merge.merge_into_partitioned":
-        "rewrites ONLY the date partitions the batch touches; "
-        "partition-pruned read-back, dynamic overwrite (the 100 TB "
-        "daily upsert; U1)",
+        "rewrites ONLY the date partitions the batch touches, each as "
+        "one key-sorted file (overwrite_partitions); partition-pruned "
+        "read-back (the 100 TB daily upsert; U1)",
+    "merge.overwrite_partitions":
+        "the one dynamic-overwrite writer: rebalance on dt lets AQE "
+        "coalesce small dates to one file and split huge ones into "
+        "bounded files; key sort tightens parquet stats",
     "merge.target_exists":
         "one filesystem metadata call via the Hadoop FS API — never "
         "infers existence from read failures",
