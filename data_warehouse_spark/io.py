@@ -46,7 +46,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # through the SESSION timezone (to_utc_timestamp('UTC') is
             # then an identity on the instant), so this is only correct
             # because the engine pins spark.sql.session.timeZone=UTC
-            # (session.py / __spark_entry__._ensure_confs). A truly
+            # (session.get_spark). A truly
             # tz-independent rewrite would still hit DST-gap ambiguity
             # in the cast, so enforce the precondition loudly instead.
             tz = spark.conf.get("spark.sql.session.timeZone")

@@ -1,10 +1,9 @@
 """Bucketed-layout queries: the write-once/join-free answer to the
 fact-to-fact shuffle (SURVEY §2.3 J11 at 100 TB).
 
-Loads inside the driver's 50-query correctness window (see
-registry._QUERY_MODULES) so j12 gets a driver-verified row; the
-zero-exchange plan shape is additionally asserted by
-tests/test_bucketing.py.
+j12's rows are checked against its DuckDB oracle by
+tests/test_parity.py; the zero-exchange plan shape is additionally
+asserted by tests/test_bucketing.py.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """End-of-pipeline dedup clustering: near-dup PAIRS -> duplicate
-COMPONENTS (operators/graph.py). Loads inside the driver's 50-query
-window (composition pinned by tests/test_registry.py); the DuckDB
-oracle computes the same components with a recursive CTE.
+COMPONENTS (operators/graph.py). The DuckDB oracle computes the same
+components with a recursive CTE.
 """
 
 from __future__ import annotations

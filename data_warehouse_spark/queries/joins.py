@@ -21,12 +21,6 @@ from data_warehouse_spark.operators.joins import asof_join, range_join_bucketed
 from data_warehouse_spark.queries.registry import register
 from data_warehouse_spark.queries.util import money_sum, money_sum_sql
 
-# Registration order within this module is NOT the driver-window knob:
-# since round 4 the 50-entry correctness window is pinned explicitly by
-# DRIVER_WINDOW in queries/registry.py (asserted in
-# tests/test_registry.py) — edit that list, not the order here.
-
-
 @register(
     "j6_asof_join",
     oracle="""

@@ -22,7 +22,7 @@ GAP_SECONDS = 14400  # 4 h; events fixture has ~7.5 h median inter-event gap
 
 # --- Planted valid-trip cohort (round-12, VERDICT r11 ask #1) ---------
 #
-# The driver's correctness gate runs at sf0.01, where the events
+# The parity check runs at sf0.01, where the events
 # fixture's inter-event gaps (~7.5 h median) leave ZERO segments inside
 # the reference's 60-3600 s gap window (trips_lambda.py:128) — so every
 # e-family gate row hash-compared two EMPTY results: green, but unable

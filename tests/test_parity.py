@@ -1,0 +1,35 @@
+"""Registry parity: every registered query, run on Spark at sf0.01, must
+equal its DuckDB oracle over the same fixture tables (row count, column
+names and order-insensitive values, via ``tools.parity.compare``).
+
+Check a subset with ``pytest tests/test_parity.py -k <query id>``.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from data_warehouse_spark.queries.registry import load_all
+from data_warehouse_spark.session import ARROW_BATCH_DEFAULT, set_arrow_batch
+from tools.parity import compare, duck_connection
+
+SF_PARITY = "/root/testdata/sf0.01"
+SPECS = load_all()
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duck_connection(SF_PARITY)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", list(SPECS))
+def test_query_matches_oracle(spark, duck, name):
+    spec = SPECS[name]
+    # Vector and blob queries pin their own Arrow tier at build time;
+    # start every query from the default so no tier leaks into the next.
+    set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
+    got = spec.fn(spark, SF_PARITY).toPandas()
+    ok, msg = compare(got, duck.sql(spec.oracle).df())
+    assert ok, f"{name}: {msg}"

@@ -1,17 +1,16 @@
-"""Regenerate COVERAGE.md's query table from the live registry.
+"""Generate / verify COVERAGE.md — the registry's query table.
 
-The prose header is kept verbatim (everything above the table); the
-table and total line are re-emitted in registry order so the numbering
-and driver-window annotation can never drift from
-``queries/registry.py``. Row summaries come from each spec's doc
-(first sentence-ish chunk, pipe-escaped).
+One row per registry query, in registration order, so the table can
+never drift from ``queries/registry.py``. Row summaries come from each
+spec's doc (first sentence-ish chunk, pipe-escaped).
 
-Usage: python tools/coverage_md.py   (rewrites COVERAGE.md in place)
+Usage:
+    python tools/coverage_md.py           # (re)write COVERAGE.md
+    python tools/coverage_md.py --check   # exit 1 if COVERAGE.md stale
 """
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -20,7 +19,20 @@ sys.path.insert(0, str(REPO))
 
 from data_warehouse_spark.queries.registry import load_all  # noqa: E402
 
-WINDOW = 50  # driver's correctness gate checks the first 50 entries
+HEADER = """\
+# COVERAGE — SURVEY.md §2 operator inventory -> implementation map
+
+<!-- GENERATED by tools/coverage_md.py — do not edit by hand;
+`python tools/coverage_md.py` regenerates, `--check` fails on drift. -->
+
+One row per query in the live registry
+(`data_warehouse_spark/queries/registry.py`), in registration order.
+Every row is checked by `tests/test_parity.py`, which is part of the
+default pytest run: it runs the query on Spark at sf0.01 and compares
+the result with its DuckDB oracle's over the same fixture tables (row
+count, column names, and order-insensitive values, floats bit-exact;
+`tools/parity.py`). Check one row with
+`pytest tests/test_parity.py -k <registry ID>`."""
 
 
 def summarize(doc: str, limit: int = 220) -> str:
@@ -28,32 +40,31 @@ def summarize(doc: str, limit: int = 220) -> str:
     return text if len(text) <= limit else text[: limit - 2] + " …"
 
 
-def main() -> int:
-    path = REPO / "COVERAGE.md"
-    head = []
-    for line in path.read_text().splitlines():
-        if re.match(r"\| *# *\|", line):
-            break
-        head.append(line)
-    while head and not head[-1].strip():
-        head.pop()
-
+def generate() -> str:
     rows = ["| # | registry ID | correctness check | summary |",
             "|---|---|---|---|"]
     specs = load_all()
     n_oracle = 0
     for i, (name, spec) in enumerate(specs.items(), 1):
-        check = "DuckDB hash" if spec.oracle else "rows-only"
+        check = "DuckDB oracle" if spec.oracle else "none"
         n_oracle += spec.oracle is not None
-        num = f"{i} (in driver window)" if i <= WINDOW else str(i)
-        rows.append(f"| {num} | {name} | {check} | {summarize(spec.doc)} |")
+        rows.append(f"| {i} | {name} | {check} | {summarize(spec.doc)} |")
+    total = f"Total: {len(specs)} queries, {n_oracle} with DuckDB oracles."
+    return HEADER + "\n\n" + "\n".join(rows) + "\n\n" + total + "\n"
 
-    total = (f"Total: {len(specs)} queries, {n_oracle} with DuckDB oracles; "
-             f"entries 1-{WINDOW} fall inside the driver's per-round "
-             "correctness window.")
-    path.write_text("\n".join(head) + "\n\n" + "\n".join(rows)
-                    + "\n\n" + total + "\n")
-    print(f"wrote {path}: {len(specs)} rows, {n_oracle} oracles")
+
+def main() -> int:
+    text = generate()
+    target = REPO / "COVERAGE.md"
+    if "--check" in sys.argv:
+        if not target.exists() or target.read_text() != text:
+            print("COVERAGE.md is stale — run tools/coverage_md.py",
+                  file=sys.stderr)
+            return 1
+        print("COVERAGE.md up to date")
+        return 0
+    target.write_text(text)
+    print(f"wrote {target}")
     return 0
 
 

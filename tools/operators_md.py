@@ -3,12 +3,13 @@ operator library (round-13, VERDICT r12 ask #8).
 
 Everything mechanical is EXTRACTED from source so it cannot rot:
 signature (ast), contract (first docstring paragraph), used-by
-(registry query functions whose module source references the name),
-tested-in (test files referencing the name). The one curated field —
+(registry query modules whose code names the function), tested-in
+(test files whose code names it). The one curated field —
 the 100 TB design argument, one line — lives in SCALE_NOTES below and
 is validated TWO-WAY: a public operator without a note fails this
-tool, and a note naming a vanished operator fails it too. verify_all.sh
-runs `--check`, which regenerates and diffs; any drift fails the gate.
+tool, and a note naming a vanished operator fails it too.
+tests/test_generated_docs.py fails when OPERATORS.md differs from what
+this tool generates.
 
 Usage:
     python tools/operators_md.py           # (re)write OPERATORS.md
@@ -388,10 +389,26 @@ def _public_fns(path: Path) -> list[ast.FunctionDef]:
             and not n.name.startswith("_")]
 
 
+def _identifiers(path: Path) -> set[str]:
+    """Every name the module's code uses: variables, attributes and
+    imported names (comments and strings do not count)."""
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.update(node.name.split("."))
+            if node.asname:
+                names.add(node.asname)
+    return names
+
+
 def generate() -> str:
-    queries = {p.stem: p.read_text()
+    queries = {p.stem: _identifiers(p)
                for p in (PKG / "queries").glob("*.py")}
-    tests = {p.name: p.read_text()
+    tests = {p.name: _identifiers(p)
              for p in (REPO / "tests").glob("test_*.py")}
 
     out = [
@@ -399,12 +416,12 @@ def generate() -> str:
         "",
         "<!-- GENERATED by tools/operators_md.py — do not edit by "
         "hand; `python tools/operators_md.py` regenerates, "
-        "`--check` (run by tools/verify_all.sh) fails on drift. -->",
+        "`--check` fails on drift. -->",
         "",
         "One entry per public function: signature, contract (first "
         "docstring paragraph), the 100 TB design argument in one "
         "line, and where it is exercised (registry query modules / "
-        "test files that reference it — extracted, so the pointers "
+        "test files whose code names it — extracted, so the pointers "
         "cannot rot).",
         "",
     ]
@@ -426,9 +443,9 @@ def generate() -> str:
                         "argument (add it in tools/operators_md.py)")
                 note = SCALE_NOTES[key]
                 seen_notes.add(key)
-            used = sorted(q for q, src in queries.items()
-                          if fn.name in src)
-            tst = sorted(t for t, src in tests.items() if fn.name in src)
+            used = sorted(q for q, ids in queries.items()
+                          if fn.name in ids)
+            tst = sorted(t for t, ids in tests.items() if fn.name in ids)
             out.append(f"### `{_sig(fn)}`")
             c = _contract(fn)
             if c:

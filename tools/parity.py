@@ -1,32 +1,20 @@
-"""Local replica of the driver's correctness gate.
+"""Spark-vs-DuckDB result comparison for the query registry.
 
-Runs every registered query on Spark AND its DuckDB oracle at a given
-sf dir, then compares row count, column-name sets, and values
-(order-insensitive, column-name-sorted — the driver's described hash
-semantics). Floats are compared exactly after the queries' own
-round(…, 6) discipline, with a tolerance fallback reported separately
-so near-misses are visible before the real gate runs.
-
-Usage:
-    python tools/parity.py [--sf /root/testdata/sf0.01] [query ...]
+``duck_connection`` registers every fixture table as a DuckDB view;
+``compare`` checks a Spark result against its oracle's: row count,
+column-name set, and values (order-insensitive, column-name-sorted).
+Floats are compared exactly after the queries' own round(…, 6)
+discipline; a near-miss is reported as such so it is easy to tell from
+a real mismatch. ``tests/test_parity.py`` runs every registry query
+through it; check a subset with ``pytest tests/test_parity.py -k <id>``.
 """
 
 from __future__ import annotations
 
-import argparse
-import math
-import sys
-import time
-from pathlib import Path
+import duckdb
+import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
-from data_warehouse_spark.io import TABLES  # noqa: E402
-from data_warehouse_spark.queries.registry import load_all  # noqa: E402
-from data_warehouse_spark.session import get_spark  # noqa: E402
+from data_warehouse_spark.io import TABLES
 
 
 def duck_connection(sf_dir: str,
@@ -119,47 +107,3 @@ def compare(spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> tuple[bool, str]:
                 i = int(neq.idxmax()) if neq.any() else 0
                 return False, f"col '{c}' differs, e.g. row {i}: {av[i]!r} != {bv[i]!r}"
     return True, "ok"
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
-
-    specs = load_all()
-    names = args.queries or sorted(specs)
-    spark = get_spark("parity")
-    con = duck_connection(args.sf)
-
-    n_pass = n_fail = n_rowsonly = 0
-    for name in names:
-        spec = specs[name]
-        t0 = time.time()
-        try:
-            sdf = spec.fn(spark, args.sf).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name:28s} spark error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        if spec.oracle is None:
-            print(f"ROWS  {name:28s} rows={len(sdf)} (no oracle) [{time.time()-t0:.1f}s]")
-            n_rowsonly += 1
-            continue
-        try:
-            ddf = con.sql(spec.oracle).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name:28s} duckdb error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        ok, msg = compare(sdf, ddf)
-        status = "PASS" if ok else "FAIL"
-        print(f"{status}  {name:28s} rows={len(sdf)} {msg if not ok else ''} [{time.time()-t0:.1f}s]")
-        n_pass += ok
-        n_fail += not ok
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -1,38 +1,21 @@
 #!/usr/bin/env bash
-# Full local verification gate, one command (the /verify skill recipe):
-#   1. pytest suite
-#   2. driver-contract simulation on a PLAIN session (catches
-#      conf-dependence bugs the tuned session would mask)
-#   3. Spark-vs-DuckDB parity for every registered oracle at sf0.01
-#   4. headline bench (prints the one JSON line the driver records)
-# Any failure stops the gate. ~12-15 min total on this box.
+# Full local verification gate, one command:
+#   0. generated docs (OPERATORS.md, COVERAGE.md) in sync
+#   1. full pytest suite, incl. the slow lanes and the registry parity
+#      lane (every query against its DuckDB oracle at sf0.01)
+#   2. headline bench (prints one JSON line)
+# Any failure stops the gate.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== [0/4] generated docs in sync =="
+echo "== [0/2] generated docs in sync =="
 python tools/operators_md.py --check
+python tools/coverage_md.py --check
 
-echo "== [1/4] pytest (FULL suite, incl. slow lanes) =="
-# pytest.ini deselects `slow` for the driver-budgeted default gate
-# (r17); the local gate runs everything.
+echo "== [1/2] pytest (FULL suite, incl. slow lanes) =="
+# pytest.ini deselects `slow` for the default run; this gate runs
+# everything.
 python -m pytest tests/ -q -m "slow or not slow"
 
-echo "== [2/4] driver contract (plain session) =="
-python - <<'EOF'
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master('local[8]')
-         .config('spark.ui.enabled', 'false').getOrCreate())
-spark.sparkContext.setLogLevel('ERROR')
-import __spark_entry__ as mod
-df = mod.entry(spark)
-n = len(df.collect())
-qs, osql = mod.queries(), mod.oracle_sql()
-assert set(osql) <= set(qs), "oracle without a query"
-print(f"entry rows: {n}; queries: {len(qs)}; oracles: {len(osql)}")
-EOF
-
-echo "== [3/4] oracle parity (sf0.01, all queries) =="
-python tools/parity.py --sf /root/testdata/sf0.01
-
-echo "== [4/4] headline bench =="
+echo "== [2/2] headline bench =="
 python bench.py
