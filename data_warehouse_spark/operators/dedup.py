@@ -91,8 +91,8 @@ def _minhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str,
     one mapInArrow pass computes shingles -> hashes -> the num_hashes
     mins per document, value-identical to the expression form.
 
-    Motivation (r16 optimization round, .r16/sig_split.py): the
-    expression form's cost is NOT the hash — it is the interpreted
+    Motivation (r16 optimization round, ddece72:.r16/sig_split.py):
+    the expression form's cost is NOT the hash — it is the interpreted
     higher-order-function lambdas building shingle strings, the
     Generate row machinery, and 32 aggregate-buffer updates per
     exploded shingle (~half the stage each at sf0.1). The kernel does
@@ -111,8 +111,8 @@ def _minhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str,
     build measures 1.9x faster on the kernel body at the sf0.1
     corpus (5k docs) and 5.1x at 20k docs, where the monolithic
     matrix's fresh-page allocation stalls dominate
-    (.r16/shingle_vec_proto.py + OPTIMIZATION_r16.md, output
-    identical by assertion on every corpus tried).
+    (ddece72:.r16/shingle_vec_proto.py + ddece72:OPTIMIZATION_r16.md,
+    output identical by assertion on every corpus tried).
 
     Exactness argument, surface by surface (every one pinned by the
     JVM-vs-kernel equality property test in tests/test_operators.py):
@@ -123,7 +123,7 @@ def _minhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str,
         split keeps leading/trailing empty tokens (limit -1); Arrow's
         ``split_pattern_regex`` (RE2) has the same empty-token
         behavior — asserted identical to re.split on the adversarial
-        corpus in .r16/shingle_vec_proto.py AND via the property test
+        corpus in ddece72:.r16/shingle_vec_proto.py AND via the property test
         (the expression form is the reference);
       - binary_join_element_wise(" ") over non-null UTF-8 strings
         concatenates the same bytes as concat_ws(" ");
@@ -201,7 +201,7 @@ def _minhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str,
             # in-place ops: the monolithic (total x num_hashes)
             # matrix is ~1 GB of fresh demand-zeroed allocation per
             # 64k-row batch — measured multi-second page-fault stalls
-            # at >=20k-doc batches (OPTIMIZATION_r16.md) — while the
+            # at >=20k-doc batches (ddece72:OPTIMIZATION_r16.md) — while the
             # chunked form bounds the temporary at ~16 MB per task
             # regardless of batch size, with bit-identical
             # per-element math (elementwise ops; chunk boundaries
@@ -330,7 +330,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     keys only; never a cross join.
 
     ``verify`` picks the exact-verify physical shape (r16, from the
-    .r16/x2_decomp.py stage split — verify was 62% of x2's wall at
+    ddece72:.r16/x2_decomp.py stage split — verify was 62% of x2's wall at
     256x, and x2 is 26% of the headline):
 
       "array" (default): each candidate doc's DISTINCT shingle set
@@ -439,7 +439,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     # checkpointed candidate tail (an ExistingRDD with no size stats),
     # so the planner defaulted to a sort-merge semi-join that
     # EXCHANGED the whole corpus — text payload included — on id just
-    # to keep the tail's docs (plans/r16/x2_minhash_lsh_before.txt,
+    # to keep the tail's docs (ddece72:plans/r16/x2_minhash_lsh_before.txt,
     # Exchange(4)+Sort(5) over the documents scan, twice). The hint
     # turns it into a broadcast semi right above the scan: zero
     # corpus shuffle. Size bound: cand_ids <= 2 x |candidate pairs|
@@ -462,7 +462,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     if verify == "array":
         # NOT checkpointed: the shingle-set subtree does run once per
         # pair side (self-join dedup re-aliases the branch; no
-        # exchange reuse even at runtime — .r16/x2_verify_shape.py),
+        # exchange reuse even at runtime — ddece72:.r16/x2_verify_shape.py),
         # but with the broadcast semi above each run is a map-only
         # scan+filter that pipelines across cores, and a measured
         # localCheckpoint barrier here cost ~2x on the whole query

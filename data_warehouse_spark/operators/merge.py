@@ -135,16 +135,17 @@ def scd2_apply(dim: DataFrame, updates: DataFrame, keys: list[str],
     r17 measured-and-rejected: a stats-gated decomposition of the
     full-outer into inner + two anti BROADCAST joins (a full outer can
     never broadcast) was built, verified row-identical, and REJECTED
-    on interleaved A/Bs (.r17/u4_ab.py, .r17/scd2_smallbatch_ab.py):
-    32% SLOWER at 64x on u4's shape (updates ~31% of the dim — each
-    of the five split branches recomputes the update subtree, costing
+    on interleaved A/Bs (ddece72:.r17/u4_ab.py and
+    ddece72:.r17/scd2_smallbatch_ab.py): 32% SLOWER at 64x on u4's
+    shape (updates ~31% of the dim — each of the five split branches
+    recomputes the update subtree, costing
     more than the one dim exchange it saves) and a wash (1.445 vs
     1.455 s) even on the target big-dim/small-batch shape, where
     Catalyst already broadcasts the tiny update side of every derived
     branch and only the kept branch pays one dim exchange. Catalyst's
     filter pushdown means only ONE branch actually executes the full
     outer; the other three already simplify to broadcast inner /
-    right-outer joins. Details: OPTIMIZATION_r17.md.
+    right-outer joins. Details: ddece72:OPTIMIZATION_r17.md.
     """
     if not attrs:
         raise ValueError("scd2_apply needs at least one compared "

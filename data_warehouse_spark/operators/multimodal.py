@@ -50,7 +50,7 @@ def attach_blob(df: DataFrame, text_col: str = "text",
     Spark strings are UTF-8 bytes internally, so the cast yields the
     identical payload (fixture-verified byte-equal, NULL-identical)
     without the charset encoder's per-row copy — measured 0.25 s of
-    the 1.075 s mm4 pipeline at 1024x (.r15/mm4_decomp.py, SCALE.md
+    the 1.075 s mm4 pipeline at 1024x (ddece72:.r15/mm4_decomp.py, SCALE.md
     r15)."""
     blob = F.col(text_col).cast("binary")
     return df.select(

@@ -38,7 +38,7 @@ def with_session_id(df: DataFrame, key: str, ts: str, gap_seconds: float,
     st4's convention and its DuckDB oracle's (r17: st4 computes its
     session aggregate through this form, ~10-20% faster at 64x/256x
     than the native batch operator on this data shape; see
-    OPTIMIZATION_r17.md). It is NOT Spark's session_window convention
+    ddece72:OPTIMIZATION_r17.md). It is NOT Spark's session_window convention
     at an exact-gap tie: session_window merges touching windows, so an
     event exactly gap_seconds after the previous one stays in its
     session, as under the default strict >. Without such ties (the

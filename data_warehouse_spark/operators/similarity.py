@@ -129,7 +129,7 @@ def _arrow_query_scan(df: DataFrame, vec_col: str, id_col: str,
     Why not the zip_with/aggregate column expression: Spark evaluates
     higher-order-function lambdas interpreted, per element — measured
     ~39x slower than DuckDB's vectorized list ops on a 3.2M x 64
-    brute-force scan (FLOORFREE.json round 3). And why mapInArrow over
+    brute-force scan (ddece72:FLOORFREE.json, round 3). And why mapInArrow over
     a pandas_udf: the embedding ListArray flattens to its values
     buffer without ever materializing a Python object per row, where
     pandas hands the kernel a Series of per-row ndarrays that
@@ -1097,7 +1097,7 @@ def pq_codebook_train(df: DataFrame, vec_col: str, id_col: str,
     replayable in SQL).
 
     What training buys — measured, not assumed (SCALE.md r14 lane,
-    .r14/pq_train_eval.py): distortion (reconstruction error) drops
+    ddece72:.r14/pq_train_eval.py): distortion (reconstruction error) drops
     ~37% over the seed and never increases (Lloyd monotonicity,
     pytest-pinned), but RANKING quality (ADC error at a query,
     recall@k) is corpus-dependent at 16 codewords: a centroid's

@@ -149,7 +149,8 @@ def x12_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # component DIAMETER — and with it the propagation ROUND COUNT, the
 # one scale dimension x8/x12's clique-like sf0.1 graphs (diameter 2-4
 # at every multiplier) never probe. doc_ids are dense 0..n-1 in the
-# fixtures AND stay dense under the floorfree salt (id*n + copy is a
+# fixtures AND stay dense under the floor-free amplifier's salt
+# (ddece72:tools/floorfree.py; id*n + copy is a
 # bijection onto 0..n*mult-1), so chain membership floor(id / L) is
 # well-defined at every multiplier; both engines derive L from their
 # own COUNT(*), and ceil(log2(.)) is float-safe across engines because

@@ -1078,7 +1078,7 @@ def x7_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 optimization round: a doc-local Arrow tf kernel (no explode,
     # no tf exchange — the x2 signature-kernel move) was built and
     # MEASURED SLOWER here: 1.70 vs 1.14 s interleaved best-of-6 at
-    # sf0.1 (.r16/x7_ab.py). x2's kernel returns 32 longs per doc; a
+    # sf0.1 (ddece72:.r16/x7_ab.py). x2's kernel returns 32 longs per doc; a
     # tf kernel must ship every distinct (doc, term) STRING back
     # across the Arrow boundary — the explode form never leaves the
     # JVM and wins. Kept the expression form; same verdict class as

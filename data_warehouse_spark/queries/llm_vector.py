@@ -236,7 +236,7 @@ def _planted_copy_id():
     has 10k vectors); on an amplified fixture (vec_id salted to
     vec_id*n + copy) a collision would silently corrupt the id space
     instead of planting copies — that's why x2d/x17 carry no
-    floor-free lanes (tools/floorfree.py) and why x17b synthesizes its
+    floor-free lanes (ddece72:tools/floorfree.py) and why x17b synthesizes its
     own embeddings. This expression makes an accidental amplified run
     ERROR at execution rather than pass with corrupt ids; it lives in
     the id path so column pruning can never drop the check
@@ -382,7 +382,7 @@ def x17_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- x17b: SemDeDup over a SPARSE synthetic embedding space ----------
 #
-# Why x17 itself gets no floor-free lane (tools/floorfree.py): the
+# Why x17 itself got no floor-free lane (ddece72:tools/floorfree.py): the
 # copy amplifier turns every fixture vector into an n-clique of
 # identical embeddings — quadratic candidate poisoning on both
 # engines — and x17's +100000 planted-copy offset collides with
@@ -422,7 +422,7 @@ def x17_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within-cell pair volume is LINEAR in N. The gate (sf0.01, N=1000)
 # evaluates to 16 cells — identical plan to x17's. The oracle's
 # brute-force assignment replay is N x n_cells cosines, which is what
-# caps the honest lane (tools/floorfree.py DEFAULT_QUERIES note).
+# caps the honest lane (ddece72:tools/floorfree.py DEFAULT_QUERIES note).
 _SEMDEDUP_SPARSE_EMB_DUCK = """
 list_transform(range(0, 64), j ->
   CAST((CASE WHEN (FLOOR(vec_id / 2)::BIGINT % 3 = 0 AND vec_id % 2 = 1)

@@ -124,7 +124,8 @@ FROM ids GROUP BY user_id, sid
         "exchange and shuffles struct-headed partial-session rows, "
         "which on this data shape (median inter-event gap ~7.5h > the "
         "4h gap, so partial pre-merge collapses almost nothing) "
-        "measured 10%/20% slower at 64x/256x (OPTIMIZATION_r17.md). "
+        "measured 10%/20% slower at 64x/256x "
+        "(ddece72:OPTIMIZATION_r17.md). "
         "Dense per-user streams where pre-merge does compress would "
         "favor the native form; the streaming path (streaming/"
         "jobs.py:session_aggs) keeps the native operator, where its "

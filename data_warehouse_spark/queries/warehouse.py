@@ -63,7 +63,7 @@ def u1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT IN subquery likewise assumes key semantics) — so the
     # batch-dedup pass is skipped: drops the partial+final
     # SortAggregate + its exchange from the plan (r16,
-    # plans/r16/u1_upsert_{before,after}.txt)
+    # ddece72:plans/r16/u1_upsert_{before,after}.txt)
     merged = upsert(old, new, keys=["o_orderkey"], new_unique=True)
     return merged.select("o_orderkey", "o_custkey",
                          F.round("o_totalprice", 6).alias("o_totalprice"), "version")

@@ -1236,7 +1236,7 @@ def test_pq_codebook_train_improves_distortion_and_recall(spark, sf_dir):
     corpus), and its IVF-PQ recall vs the exact top-20 must be >= the
     sampled book's on the same prebuilt index, ON THIS CORPUS. The
     recall half is fixture-specific, not universal: the r14 lane
-    (.r14/pq_train_eval.py, SCALE.md) measured that at 16 codewords a
+    (ddece72:.r14/pq_train_eval.py, SCALE.md) measured that at 16 codewords a
     data-point codebook can out-RANK the lower-distortion Lloyd means
     on clustered/manifold corpora (centroid-ADC's systematic
     underestimation bias = per-cell quantization energy), which is
@@ -1273,7 +1273,7 @@ def test_pq_codebook_train_improves_distortion_and_recall(spark, sf_dir):
     # recall as a MEAN over 4 queries: single-query recall is
     # high-variance and can even invert the codebook ranking on
     # low-intrinsic-dimension corpora (the r14 manifold counterexample,
-    # SCALE.md / .r14/pq_train_eval_sin_manifold.json)
+    # SCALE.md / ddece72:.r14/pq_train_eval_sin_manifold.json)
     qids = [0, 7, 19, 42]
     qvs = {r.vec_id: list(r.embedding) for r in
            emb.filter(F.col("vec_id").isin(qids)).collect()}

@@ -86,7 +86,7 @@ def test_lsh_broadcast_gate_falls_back_above_cap(spark, sf_dir, monkeypatch):
     and after execution AQE can re-plan from runtime stats; at the
     production scale the gate protects, the tail is an ExistingRDD
     with no stats and the unhinted plan is the pre-r16 SMJ semi (the
-    shape in plans/r16 x2_minhash_lsh_before.txt)."""
+    shape in ddece72:plans/r16/x2_minhash_lsh_before.txt)."""
 
     docs = load_table(spark, sf_dir, "documents").limit(40) \
         .select("doc_id", "text")

@@ -777,7 +777,8 @@ def test_chain_lane_components_closed_form(spark):
         expect = {i: c for i, c in expect.items()
                   if min(L, n - c) >= 2}
         assert comp == expect, n
-    # diameter dimension: L strictly grows across the floorfree lane
+    # diameter dimension: L strictly grows across the floor-free lane's
+    # multipliers (ddece72:tools/floorfree.py)
     mults = [5000, 5000 * 64, 5000 * 256, 5000 * 1024]
     Ls = [max(2, math.ceil(math.log2(m))) for m in mults]
     assert Ls == sorted(set(Ls)) and Ls[-1] == 23

@@ -1,10 +1,9 @@
 """Dump `.explain("formatted")` for registry queries to files.
 
-Usage: python tools/dump_plans.py --out plans/r16 --suffix before [--sf DIR] Q [Q...]
-       python tools/dump_plans.py --out plans/r16 --suffix before --headline
+Usage: python tools/dump_plans.py --out OUT --suffix before [--sf SF_DIR] Q [Q...]
 
-Writes plans/r16/<query>_<suffix>.txt for each query — the judge-facing
-plan evidence for optimization rounds (OPTIMIZATION_r16.md contract).
+Writes OUT/<query>_<suffix>.txt for each query, so a plan change can be
+diffed before and after an edit.
 """
 
 from __future__ import annotations
@@ -23,14 +22,8 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", required=True)
-    ap.add_argument("--headline", action="store_true")
-    ap.add_argument("queries", nargs="*")
+    ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
-
-    names = list(args.queries)
-    if args.headline:
-        import bench
-        names = list(dict.fromkeys(bench.HEADLINE + names))
 
     specs = load_all()
     out_dir = Path(args.out)
@@ -38,7 +31,7 @@ def main() -> int:
 
     from data_warehouse_spark.session import get_spark  # noqa: E402
     spark = get_spark("dump_plans")
-    for name in names:
+    for name in args.queries:
         df = specs[name].fn(spark, args.sf)
         # _sc / _jdf internals are stable across Spark 3.x/4.x and are
         # the only way to capture explain() output without stdout games

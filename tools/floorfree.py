@@ -1,371 +1,15 @@
-"""Floor-free Spark-vs-DuckDB bench: same queries, same oracles, same
-data — amplified until compute dominates the local-mode job floor.
+"""Engine-side digest comparison of a Spark result against its DuckDB
+oracle, without pulling rows to the driver.
 
-Motivation (BASELINE.md): at sf0.1 the median registry query runs in
-~0.3 s, which is local-mode's fixed per-job cost (task scheduling + AQE
-planning), so wall-clock ratios at that scale compare Spark's *floor*
-to DuckDB's, not the engines' throughput. This tool materializes an
-N-times-amplified copy of the fixtures (key columns salted per copy so
-join/group/session cardinality scales with the data instead of just
-deepening groups), then runs the UNMODIFIED registry query and its
-UNMODIFIED DuckDB oracle side by side. Because both engines execute
-the exact artifacts the correctness gate checks, there is nothing to
-re-derive and nothing to drift.
-
-Usage:
-    python tools/floorfree.py [--src /root/testdata/sf0.1]
-        [--out /tmp/floorfree] [--mults 16,64] [--queries a1,...]
-        [--runs 2]
-
-Prints a markdown table and one JSON line (also written to
-FLOORFREE.json at the repo root).
+``digest_compare(spark_df, con, oracle_sql)`` reduces each engine's
+result to a row count and two md5-slice sums over a canonical row
+string that both engines render byte-identically. The benchmark's
+``bi_queries`` check (``warehouse_bench/checks.py``) and
+``tests/test_digest.py`` use it; ``tools/parity.duck_connection``
+builds the DuckDB side.
 """
 
 from __future__ import annotations
-
-import argparse
-import json
-import sys
-import time
-from pathlib import Path
-
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
-
-import duckdb  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from data_warehouse_spark.io import TABLES, load_table  # noqa: E402
-from data_warehouse_spark.queries.registry import load_all  # noqa: E402
-from data_warehouse_spark.session import (  # noqa: E402
-    ARROW_BATCH_DEFAULT, get_spark, set_arrow_batch,
-)
-
-# Queries whose runtime is data-dominated at >=16x and whose oracle is
-# hash-verified by the correctness gate (so both engines provably do
-# the same logical work). x2c is block-quadratic: capped at 8x — the
-# last cell where the exact path runs (and finishes) on BOTH sides;
-# at >=16x Spark auto-routes oversized blocks through the LSH
-# prefilter (different work than DuckDB's exact oracle) and the r7
-# attempt hit a ~50-min quadratic oracle wall anyway.
-DEFAULT_QUERIES = {
-    "a1_q1_pricing_summary": (16, 64),
-    "w5_sessionize": (16, 64),
-    "e1_trips": (16, 64, 256),
-    # e1's chain over the bucketed ingest layout (zero-exchange window)
-    "e1b_bucketed_trips": (16, 64, 256),
-    "j11_fact_fact_join": (16, 64, 256),
-    # same oracle as j11: measures the bucketed co-located layout
-    # against DuckDB's in-memory hash join (the bucketed write happens
-    # in the untimed warm run, as it would in a warehouse's ingest)
-    "j12_bucketed_fact_join": (16, 64, 256),
-    "x3_cosine_topk": (16, 64),
-    # 4x and 8x are the measurable exact-path cells (16x documented
-    # unmeasurable in r7: quadratic wall + GC pressure, 50-min timeout;
-    # >=16x the registry auto-routes through the LSH prefilter and the
-    # engines stop doing the same work — DIVERGENCE_CAPS)
-    "x2c_ngram_jaccard": (4, 8),
-    # round-5 additions, all data-dominated with hash-verified oracles:
-    # CUBE (Expand x4 of lineitem-shaped orders), incremental rollup
-    # (events agg + group-sized merge), PII scrub (regex scan over
-    # documents). x2d is deliberately ABSENT: its 8-bit default bands
-    # are sized for ~1e5-1e6 rows (SCALE.md) and its brute-force oracle
-    # is quadratic for DuckDB — neither side measures engine throughput
-    # at amplified scale. x2 (MinHash) is absent for its ORACLE's
-    # sake: the exact-Jaccard brute-force replay self-joins the gram
-    # table, and amplification multiplies every gram's frequency Nx —
-    # an N^2 join blowup on the DuckDB side only (Spark's side stays
-    # banding-bounded), so the cell would time one engine's algorithm
-    # against the other's oracle. x4 (label-blocked pairwise sim) is absent for
-    # the same class of reason as x2c's cap: amplification multiplies
-    # every label block 16x+, tripping the oversized-block auto-route
-    # through the IVF-cell prefilter while the DuckDB oracle stays
-    # exact-quadratic — the engines stop doing the same logical work
-    # at exactly the scales worth measuring.
-    # Round-12 additions x2g and x17 are absent for the same two
-    # classes. x2g (incremental MinHash): the per-copy text token
-    # leaves every corpus copy of an original a >0.9-Jaccard near-dup
-    # of every batch copy of it, so candidate volume grows as
-    # batch x n-copies (quadratic in the multiplier) on BOTH engines —
-    # a copy-clique artifact, not pipeline throughput; its scale
-    # evidence is its components' lanes: x2f (identical banding
-    # machinery, oracle-replayed to 1024x) and x2e (identical
-    # incremental index-join shape, 4096x). x17 (SemDeDup): the
-    # amplifier copies embedding VECTORS verbatim per copy (only
-    # vec_id is salted), planting n-clique cells of cos=1.0 exact
-    # duplicates — Σ|cell|² goes quadratic in the multiplier on both
-    # engines, and the query's +100000 planted-copy id offset
-    # collides with the salted id space at >=64x; the honest scale
-    # knob (n_cells grows with the corpus — the SemDeDup paper's own
-    # regime) is a parameter, not a data multiplier, and its
-    # components' lanes (x3's scan-score kernel, x4's blocked pair
-    # join, mm4's map-only Arrow class) carry the amplified evidence.
-    "a11_cube": (16, 64),
-    # u7 (incremental rollup) was REMOVED from this harness in r14
-    # (VERDICT r13 ask #1): amplifying history and delta TOGETHER
-    # contradicts the operator's design point (merge exists to beat
-    # the recompute when history >> delta), so its cells timed fixed
-    # merge machinery against a recompute this amplifier keeps
-    # trivially cheap — the lane, not the operator, was wrong. Its
-    # honest lane is .r14/u7_lane.py (the x2g probe-protocol
-    # template): 16x..1024x-amplified HISTORY state maintained by a
-    # FIXED 1x delta, merge-vs-rebuild on both engines,
-    # merge-equals-rebuild values checked cross-engine at every
-    # multiplier — results in SCALE.md ("u7 history>>delta lane").
-    "x11_pii_redaction": (16, 64),
-    # round-13: the two new map-only operators get honest lanes on
-    # arrival — amplification is linear work on both engines (no pair
-    # structure anywhere). x20 explodes each doc into token windows
-    # (output ~n_tokens/48 rows per doc, value-checked via the digest
-    # above the pull cap); x3d's oracle replays the N x 16-codeword x
-    # 8-subspace distance table (~41M list_sum rows at 64x, measured
-    # 2.9 s — linear, so the lane runs to 1024x and shows the
-    # fixed-codegen-cost amortization crossing below 1).
-    "x20_chunk_overlap": (16, 64, 256),
-    "x3d_pq_adc": (4, 16, 64, 256, 1024),
-    # round-13: the mixture schedule — Spark's strata x chunks
-    # prefix sum vs DuckDB's per-partition window (5 language
-    # partitions caps its thread use); linear work both sides
-    "x21_mixture_schedule": (16, 64, 256, 1024),
-    # x3e (IVF-PQ probe) is deliberately ABSENT: the amplifier salts
-    # only vec_id, so the 16 smallest-id IVF seed vectors become 16
-    # verbatim copies of original 0 — the coarse quantizer collapses
-    # to one cell on both engines and "candidates" = the whole corpus,
-    # a degenerate configuration no deployment would run. Its
-    # components' lanes (x3d's ADC kernel through 1024x, x17b's
-    # cell-assignment machinery, x3-class scan-score) carry the
-    # amplified evidence; x3e's own evidence is the sf0.01 value
-    # oracle replaying both cut boundaries plus the recall and
-    # prebuilt-index-equivalence tests.
-    # late round-5 additions: decontamination (gram explode + broadcast
-    # eval set — amplification's copy-cliques make ~every doc overlap,
-    # a worst-case-dense but realistic join), incremental dedup
-    # (sha256 + group + shuffle join on uniform keys). x14 is absent:
-    # its output is budget-bounded (~200 rows at any multiplier) and
-    # the per-stratum window is counts-only — floor-dominated by
-    # construction, like u7.
-    "x13_decontaminate": (16, 64, 256),
-    "x2e_incremental_dedup": (16, 64, 256),
-    # validation report: a union'd full scan + conditional-sum
-    # aggregate + distinct-count — data-dominated, hash-verified
-    "dq1_validation_report": (16, 64, 256),
-    # round-6: sequence packing — doc-cardinality output (5.1M rows at
-    # 1024x); Spark's two-phase prefix sum vs DuckDB's per-stratum
-    # window, hash-verified
-    "x15_sequence_packing": (16, 64, 256, 1024),
-    # round-8 additions (VERDICT r7 ask #5): the three most expensive
-    # non-iterative compositions, previously sf0.1-floor-dominated
-    # only. e3 = the reference's [declared] end-state (J9 spatial
-    # prefilter + as-of + broadcast dims under ONE plan); e2 = trips
-    # rollup; j9 = grid-prefiltered ray-cast spatial join.
-    "e3_enriched_trips": (16, 64, 256, 1024),
-    "e2_carbon_savings": (16, 64, 256, 1024),
-    # round-9 (VERDICT r8 ask #2): the carbon rollup the way the
-    # recurring daily job runs it — off e1b's bucketed layout
-    "e2b_carbon_bucketed": (16, 64, 256, 1024),
-    "j9_spatial_join": (16, 64, 256, 1024),
-    # round-9: repeated-span dedup. Capped at 16x: amplification makes
-    # every document body a copy-clique (the per-copy token sits at the
-    # END of the text, so the body's 40-char windows repeat across all
-    # N copies) — match volume grows as N^2 per window (C(N,2) pairs),
-    # so 16x already means ~1.3M windows x 120 pairs ~ 150M hit rows on
-    # BOTH engines (the honest same-work cell), 64x would be ~2.6B
-    # (unmeasurable either side), and >=128x the df<=64 hot-hash cap
-    # drops every body window on both engines, leaving a trivially-
-    # empty cell. Real corpora share spans sparsely; the clique cells
-    # still compare join+islands throughput on identical volumes.
-    "x16_span_dedup": (4, 16),
-    # round-10: the removal step over the same clique corpus as x16
-    # (same divergence cap and for the same reason — the cut list IS
-    # x16's span report); measures interval-merge + splice on top of
-    # detection, both engines replaying identical work
-    "x16b_span_removal": (4, 16),
-    # round-13 (VERDICT r12 ask #4): SemDeDup's honest amplified lane
-    # — embeddings derive from vec_id alone (x16c's recipe in vector
-    # space), planted one-sign-flip pairs at cosine exactly 62/64,
-    # n_cells grows with the corpus so within-cell pair volume stays
-    # linear. Capped where the ORACLE's brute-force N x n_cells
-    # assignment replay stops being runnable (see DIVERGENCE_CAPS).
-    "x17b_semdedup_sparse": (4, 16, 64),
-    # round-10 (VERDICT r9 ask #3): the sparse-sharing scale lane the
-    # copy-clique amplifier can't poison — the corpus derives from
-    # doc_id alone (unique md5-stream bodies, one planted 128-char
-    # span per third id-pair), so amplification grows match volume
-    # LINEARLY and both engines do identical work at every multiplier
-    "x16c_span_dedup_sparse": (64, 256),
-    # round-10: the MinHash family's first honest scale lane — x2's
-    # oracle-side quadratic blowup is documented above; x2f's sparse
-    # corpus keeps gram overlap linear AND its oracle replays the
-    # banding itself (an LSH miss is engine-identical, so the cells
-    # stay same-work at any pair count)
-    "x2f_minhash_sparse": (64, 256, 1024),
-    # round-10 (VERDICT r9 ask #4): the validation report without the
-    # exact-distinct cliff — sketch uniqueness rides the one row-rule
-    # aggregate on BOTH engines (DuckDB's approx_count_distinct in the
-    # oracle), so the cell measures scan+conditional-sum throughput
-    "dq1b_validation_sketch": (16, 64, 256, 1024),
-    # round-9 widening: the two headline families still without
-    # amplified cells where a cell is meaningful — exact sha2 dedup
-    # (hash-groupBy over the full text payload) and top-k
-    # (TakeOrderedAndProject vs ORDER BY LIMIT). j2 is deliberately
-    # absent (broadcast join is floor-bound at every mult) and x2's
-    # absence is documented (oracle-side quadratic blowup).
-    "x1_exact_dedup": (16, 64, 256, 1024),
-    "o2_topk": (16, 64, 256, 1024),
-    # round-8 widening: the remaining core warehouse families with no
-    # amplified evidence — as-of join (union + last-window rewrite),
-    # MERGE/upsert (left-anti + union result state), and the TF-IDF
-    # explode -> tf/df agg -> broadcast-dictionary join pipeline.
-    # x5d runs the md5-60 ORACLE configuration on both engines (the
-    # only hash family both compute bit-identically); the production
-    # xxhash64 path's Spark-only cost is measured in SCALE.md's note.
-    "x5d_fingerprint": (16, 64),
-    # multimodal: real PNG encode->decode->resize plan over the blob
-    # Arrow tier; DuckDB replays the deterministic dims arithmetic
-    "mm2_image_resize": (16, 64, 256, 1024),
-    # round-11 (VERDICT r10 ask #4): the two remaining multimodal
-    # queries — mm3 frame-index explode and mm4 decode->feature->top-k
-    # — both map-only over the blob tier, oracles replay the
-    # deterministic arithmetic, so amplified cells are same-work
-    "mm3_frame_sample": (16, 64, 256, 1024),
-    # r14 (VERDICT r13 ask #2): mm4 is now the whole-stage-codegen
-    # path (octet_length column math); mm4b is the SAME semantics
-    # behind the mapInPandas encoder seam, so the mm4b-minus-mm4 gap
-    # at each multiplier IS the measured Arrow serde + Python cost of
-    # the seam a real encoder would pay
-    "mm4_feature_ann": (16, 64, 256, 1024),
-    "mm4b_feature_ann_seam": (16, 64, 256, 1024),
-    # round-11 (VERDICT r10 ask #3): iterative connected components on
-    # the PLANTED-DIAMETER chain lane — chain length ceil(log2(n))
-    # grows the propagation round count with amplification (13 rounds
-    # at 1x -> 23 at 1024x), the dimension x8/x12's clique-like sf0.1
-    # graphs never probe; the DuckDB oracle iterates its recursive CTE
-    # over the same edges (same O(n * diameter) label volume)
-    "x8b_components_sparse": (16, 64, 256, 1024),
-    "x12b_dedup_corpus_sparse": (16, 64, 256, 1024),
-    # round-11: FIXED diameter 256 at every multiplier — Spark runs
-    # alternating large/small-star (rounds ~log, diameter-independent)
-    # while the DuckDB recursion must take all 256 iterations over a
-    # reach table of n*diameter rows (the recursion IS the wall:
-    # 300.6 s at 256x's 164M rows vs Spark's 20.6 s). 1024x added in
-    # r12 (VERDICT r11 ask #5): both sides MEASURED, or Spark's wall +
-    # a captured refusal — no more extrapolated oracle estimate
-    "x8c_components_highdiam": (16, 64, 256, 1024),
-    # round-12 (VERDICT r11 ask #4): the AUTO-routed form on the same
-    # fixed-diameter-256 lane — the router must detect non-convergence
-    # in its 8-round min-label probe, contract by partial labels, and
-    # hand the quotient to stars; the lane shows what the probe +
-    # contraction cost on top of x8c's explicit stars choice
-    "x8d_components_auto": (16, 64, 256, 1024),
-    "j6_asof_join": (16, 64, 256, 1024),
-    "u1_upsert": (16, 64, 256, 1024),
-    "x7_tfidf": (16, 64, 256, 1024),
-}
-
-# (key columns salted as key*n+copy) per amplified table; text gets a
-# per-copy token so amplification never plants exact-duplicate cliques
-# that would blow candidate pairs up quadratically.
-# above these multipliers a cell cannot be honestly measured by this
-# harness — enforced even under an explicit --mults. Two distinct cap
-# classes, distinguished so the warning says WHY:
-#   divergence — the Spark query and the DuckDB oracle stop doing the
-#     same logical work above the cap (see DEFAULT_QUERIES notes);
-#   oom — the DuckDB oracle exceeds the box's memory above the cap
-#     (the recorded r9 cells carry the refusal / standalone protocol);
-#     a co-resident harness re-run would just OOM the box again.
-DIVERGENCE_CAPS = {"x2c_ngram_jaccard": 8,
-                   # copy-clique match volume: 64x ~ 2.6B hit rows on
-                   # both engines (unmeasurable), >=128x trivially
-                   # empty under the df<=64 cap — see DEFAULT_QUERIES
-                   "x16_span_dedup": 16,
-                   "x16b_span_removal": 16,
-                   # DuckDB's replay of the 614.4M-row result state at
-                   # 4096x was OOM-killed at 130.6 GB even standalone
-                   "u1_upsert": 1024,
-                   # x13's oracle at 4096x only completes STANDALONE
-                   # (peak 111 GB RSS)
-                   "x13_decontaminate": 1024,
-                   # r11: the K-pass hash-range decomposition (x16c
-                   # picks ceil(windows/8e8) passes; operators/
-                   # dedup.py shared_spans n_passes) bounds Spark's
-                   # per-pass spill to ~16 GB, so 1024x (3.15B
-                   # fingerprints, the r10 single-pass ENOSPC) now
-                   # completes; the cap moves to 1024 because 4096x
-                   # (12.6B windows) would need ~16 passes of explode
-                   # CPU on Spark AND DuckDB's monolithic wins CTE
-                   # (~300 GB) has no equivalent lever — the oracle
-                   # side is the wall, as at 1024x
-                   "x16c_span_dedup_sparse": 1024,
-                   # r13: the oracle replays nearest-centroid
-                   # assignment as a brute N x n_cells cross join +
-                   # per-vector window (n_cells = N/640 grows with
-                   # the corpus): 64x is 6.4e8 scored rows through a
-                   # QUALIFY window; 256x would be 1e10 — row-wise
-                   # list arithmetic puts that at hours-to-days on
-                   # the oracle side while Spark's Arrow matmul
-                   # kernel does the identical logical work in
-                   # seconds. Same class as x2c: the exact replay,
-                   # not the operator, is what stops scaling.
-                   "x17b_semdedup_sparse": 64}
-CAP_REASONS = {"u1_upsert": "DuckDB oracle OOMs the box",
-               "x13_decontaminate": "DuckDB oracle OOMs co-resident",
-               "x17b_semdedup_sparse":
-                   "oracle's brute N x n_cells assignment replay "
-                   "exceeds runnable wall-clock above 64x",
-               "x16c_span_dedup_sparse":
-                   "DuckDB wins CTE exceeds the box's disk; Spark-"
-                   "side K-pass measured through 1024x"}
-
-SALT_KEYS = {
-    "lineitem": ["l_orderkey"],
-    "orders": ["o_orderkey"],
-    "events": ["event_id", "user_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
-
-# Value verification (round-12, VERDICT r11 ask #2): when the oracle
-# completes, both result sets are pulled and compared with the parity
-# harness's order-insensitive column-name-sorted discipline, so a value
-# drift on the amplified lanes — exactly where K-pass routing, AQE
-# strategy flips, and spill paths activate — fails the cell instead of
-# hiding behind a row-count match. Above the cap a result pull would
-# dominate the measurement host's memory (u1@1024x materializes a
-# 153.6M-row result state), so those cells are verified by the
-# engine-side md5-sum digest instead (digest_compare below): each
-# engine reduces its own result to three scalars, nothing is pulled
-# (round-13, VERDICT r12 ask #2 — no more values_match='skipped' for
-# over-cap cells unless the oracle itself refuses to run co-resident).
-VALUES_ROW_CAP = 6_000_000
-
-# Approx-class exemptions: queries whose outputs are engine-specific
-# sketch ESTIMATES at amplified cardinalities. dq1b's uniqueness column
-# is HLL-family on both sides (Spark approx_count_distinct vs DuckDB
-# approx_count_distinct(ROW(...))): the estimates agree at the sf0.01
-# gate's cardinality (hash-verified there) but legitimately drift apart
-# as amplification grows the true distinct count; the cell records the
-# exemption string instead of a vacuous true/false.
-VALUES_EXEMPT = {
-    "dq1b_validation_sketch":
-        "HLL sketch estimates are engine-specific at amplified "
-        "cardinalities; exact-value parity is enforced at the sf0.01 "
-        "gate (CORRECTNESS hash_match)",
-}
-
-# Ratio-class exemptions (r14 verdict ask #4): cost-measurement lanes
-# whose RATIO is the deliverable, not a weakness to close. mm4b exists
-# to measure the Arrow encoder seam's serde+Python tax against its
-# byte-identical JVM twin (mm4) — bench(mm4b) - bench(mm4) IS the
-# published seam cost (SCALE.md); its own DuckDB ratio compares a
-# deliberately-seamed plan against an engine with no seam at all.
-# Values still verify normally; only the ratio carries the label.
-RATIO_EXEMPT = {
-    "mm4b_feature_ann_seam":
-        "deliberate Arrow-seam cost lane: the mm4b-minus-mm4 delta is "
-        "the measured serde tax of the mapInPandas encoder seam "
-        "(SCALE.md); the JVM path a user should run is mm4",
-}
-
 
 _DIGEST_SEP = "|~|"
 _DIGEST_NULL = "<NULL>"
@@ -422,9 +66,9 @@ def digest_compare(spark_df, con,
     engine reduces its result to (count, sum of two independent 60-bit
     md5 slices over the canonical row string) and only the three
     scalars cross the engine boundary. A multiset difference of even
-    one row flips a sum with probability 1 - 2^-120. This is what lets
-    the >6M-row floor-free top cells carry values_match=true instead of
-    'skipped' (VERDICT r12 ask #2)."""
+    one row flips a sum with probability 1 - 2^-120.
+
+    Returns (ok, message, spark_rows, duckdb_rows)."""
     fields = [(f.name, f.dataType.simpleString())
               for f in spark_df.schema.fields]
     sp_row, du_row = _digest_parts(fields)
@@ -443,522 +87,9 @@ def digest_compare(spark_df, con,
     k = (int(duck_agg[0]), int(duck_agg[1] or 0), int(duck_agg[2] or 0))
     if s == k:
         return True, (f"engine-side md5-sum digest over {s[0]} rows "
-                      "(result exceeds the pull cap; two independent "
-                      "60-bit slices + count, all equal)"), s[0], k[0]
+                      "(two independent 60-bit slices + count, all "
+                      "equal)"), s[0], k[0]
     parts = [p for p, (a, b) in zip(("count", "digest1", "digest2"),
                                     zip(s, k)) if a != b]
     return False, (f"digest mismatch ({', '.join(parts)}): "
                    f"spark={s} duckdb={k}"), s[0], k[0]
-
-
-def build_amplified(spark, src: str, out: str, n: int,
-                    tables: list[str] | None = None) -> str:
-    """Materialize src fixtures amplified n-x under {out}/<src>_amp{n}/
-    — an in-plan explode per table (one scan), keys salted per copy.
-    The cache directory is keyed by the SOURCE path too: a bare amp{n}
-    marker would silently serve one --src's amplified data to a run
-    against another (wrong data, right-looking label).
-
-    `tables` limits the build to the listed tables (per-table done
-    markers, so later runs can top the directory up) — the lever that
-    makes a 4096x cell fit on disk: a FULL 4096x build is ~56 GB, but
-    w5 needs only events (~8 GB). A query touching an unbuilt table
-    fails loudly (missing path), never silently on partial data."""
-    import hashlib
-    src_tag = hashlib.md5(src.encode()).hexdigest()[:8]
-    amp_dir = f"{out}/{src_tag}_amp{n}"
-    done_marker = Path(amp_dir) / "_DONE"
-    wanted = list(tables) if tables else list(TABLES)
-    if done_marker.exists():  # legacy full-build marker
-        return amp_dir
-    per_table_done = {t: (Path(amp_dir) / f"_DONE_{t}").exists()
-                      for t in wanted}
-    if all(per_table_done.values()):
-        return amp_dir
-    for t in TABLES:
-        if t not in wanted or per_table_done.get(t):
-            continue
-        df = load_table(spark, src, t)
-        if t in SALT_KEYS:
-            # repartition BEFORE the explode: the source arrives as a
-            # handful of file splits, and exploding 256 copies inside
-            # 3 tasks serializes the whole build on one straggler.
-            df = df.repartition(32).withColumn("__copy", F.explode(
-                F.sequence(F.lit(0), F.lit(n - 1))))
-            for k in SALT_KEYS[t]:
-                df = df.withColumn(k, F.col(k) * n + F.col("__copy"))
-            if t == "documents":
-                df = df.withColumn("text", F.concat_ws(
-                    " ", F.col("text"), F.concat(F.lit("copytok"),
-                                                 F.col("__copy"))))
-            df = df.drop("__copy")
-        # The trailing round-robin repartition is LOAD-BEARING for
-        # benchmark realism, not just file count: it interleaves the
-        # salted copies the way a real log interleaves concurrent
-        # users. Writing copies contiguously instead (as the pre-
-        # explode partitioning alone would) hands both engines a
-        # clustered-by-key layout a real ingest never produces — one
-        # trial run on that layout cut DuckDB's e1 window time 9x.
-        df.repartition(32).write.mode("overwrite") \
-            .parquet(f"{amp_dir}/{t}.parquet")
-        (Path(amp_dir) / f"_DONE_{t}").touch()
-    if not tables:  # a full build also earns the legacy whole-dir marker
-        done_marker.touch()
-    return amp_dir
-
-
-def build_perm_documents(spark, src: str, amp_dir: str, n: int) -> None:
-    """Permutation-amplified documents into {amp_dir}/documents.parquet
-    (the r16 .r16/x2_decomp.py recipe, promoted here for the bench's
-    floor-free lane): copy c rewrites the text through its own
-    permutation of a 10-letter alphabet (`translate`), so copies of one
-    document are NOT near-duplicates of each other and pair-based
-    operators (x2's LSH banding + verify) scale LINEARLY with the
-    multiplier. The salted `copytok` amplifier above is right for the
-    oracle-replayed lanes (which exclude x2 for exactly this reason)
-    but leaves every original's n copies a >0.9-Jaccard clique —
-    quadratic verify volume, a different workload, not a scaling lane.
-    Deterministic: fixed alphabet, itertools permutation order, fixed
-    id offset; 32 output files so the scan parallelizes."""
-    import itertools
-    alpha = "etaoinshrd"
-    perms = []
-    for p in itertools.permutations(alpha):
-        perms.append("".join(p))
-        if len(perms) == n:
-            break
-    docs = load_table(spark, src, "documents").select("doc_id", "text")
-    parts = [docs.select(
-        (F.col("doc_id") + 10_000_000 * c).alias("doc_id"),
-        F.translate("text", alpha, p).alias("text"))
-        for c, p in enumerate(perms)]
-    amp = parts[0]
-    for p in parts[1:]:
-        amp = amp.unionByName(p)
-    amp.repartition(32).write.mode("overwrite") \
-        .parquet(f"{amp_dir}/documents.parquet")
-
-
-def _teardown_jvm(spark) -> None:
-    """Fully stop the resident Spark JVM (not just the session) so the
-    --duck-subproc DuckDB leg is timed on a QUIET box. A stopped
-    SparkSession still leaves the gateway JVM alive with its committed
-    heap; with the 48g driver heap resident, the identical dq1@4096x
-    oracle measured 39.5 s vs 14.5 s after JVM exit (r16) — the
-    asymmetry was the harness, not the engine. The module-level py4j
-    state is reset so get_spark() relaunches a fresh JVM (~6 s)."""
-    import time as _t
-
-    from pyspark import SparkContext
-    from pyspark.sql import SparkSession
-
-    gateway = spark.sparkContext._gateway
-    proc = getattr(gateway, "proc", None)
-    spark.stop()
-    try:
-        gateway.shutdown()
-    except Exception:
-        pass
-    if proc is not None:
-        try:
-            proc.wait(timeout=30)
-        except Exception:
-            try:
-                proc.kill()
-            except Exception:
-                pass
-    else:
-        _t.sleep(3)  # async JVM exit; give it a beat
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-    SparkSession._instantiatedSession = None
-    SparkSession._activeSession = None
-
-
-def duck_con(amp_dir: str) -> duckdb.DuckDBPyConnection:
-    # shared with tools/parity.py — one view-registration helper, the
-    # glob suffix is the only difference between the two layouts;
-    # skip_missing tolerates table-limited (--tables) amplified builds
-    from tools.parity import duck_connection
-    return duck_connection(amp_dir, pattern="{dir}/{t}.parquet/*.parquet",
-                           skip_missing=True)
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/tmp/floorfree")
-    ap.add_argument("--runs", type=int, default=2,
-                    choices=range(1, 100), metavar="N")
-    ap.add_argument("--queries", default=",".join(DEFAULT_QUERIES))
-    ap.add_argument("--mults", default="")
-    ap.add_argument("--tables", default="",
-                    help="comma list: amplify only these tables (disk "
-                         "lever for very large mults; queries touching "
-                         "unbuilt tables fail loudly)")
-    ap.add_argument("--duck-subproc", action="store_true",
-                    help="time the DuckDB leg in a fresh process "
-                         "(tools/duck_time.py) so it is not measured "
-                         "against this process's resident Spark JVM — "
-                         "use for cells whose Spark side spills "
-                         "heavily (the r16 dq1@4096x asymmetry)")
-    ap.add_argument("--values-only", action="store_true",
-                    help="verify values for EXISTING cells without "
-                         "re-timing them: one untimed execution per "
-                         "side, merge values_match/values_note into "
-                         "the recorded cell, keep its timings. Safe "
-                         "to run under CPU contention (nothing is "
-                         "measured); refusal cells are skipped (no "
-                         "oracle result exists to compare).")
-    args = ap.parse_args()
-
-    specs = load_all()
-    plan = {q: (tuple(int(m) for m in args.mults.split(","))
-                if args.mults else DEFAULT_QUERIES.get(q, (16, 64)))
-            for q in args.queries.split(",")}
-    # divergence caps hold even under an explicit --mults: above the
-    # cap a query's two engines no longer do the same logical work
-    # (x2c's Spark side auto-routes oversized blocks through the LSH
-    # prefilter while the DuckDB oracle stays exact-quadratic), so the
-    # cell would be meaningless — and possibly hours of oracle runtime
-    for q, cap in DIVERGENCE_CAPS.items():
-        if q in plan and any(m > cap for m in plan[q]):
-            kept = tuple(m for m in plan[q] if m <= cap)
-            why = CAP_REASONS.get(q, "engines diverge")
-            print(f"capping {q} mults {plan[q]} -> {kept} ({why} "
-                  f"above {cap}x)", file=sys.stderr)
-            plan[q] = kept
-
-    # Merge into any existing FLOORFREE.json: partial re-runs (one query,
-    # one mult) must not clobber previously measured cells — a full
-    # x2c@16 cell costs ~15 min to reproduce.
-    out_path = REPO / "FLOORFREE.json"
-    results: dict[str, dict] = {}
-    if out_path.exists():
-        try:
-            results = json.loads(out_path.read_text()).get("floorfree", {})
-        except ValueError:
-            pass
-
-    spark = get_spark("floorfree")
-    # measure the per-job floor so each cell can report its floor share
-    spark.range(1).write.format("noop").mode("overwrite").save()
-    t0 = time.time()
-    spark.range(1).write.format("noop").mode("overwrite").save()
-    floor_s = round(time.time() - t0, 3)
-
-    if args.values_only:
-        # plan = every RECORDED cell of the requested queries (still
-        # divergence-capped), and never build fixtures: completing a
-        # partial --tables amp dir into a full build here could blow
-        # the disk; a cell whose amp dir is gone is skipped loudly.
-        import hashlib
-        src_tag = hashlib.md5(args.src.encode()).hexdigest()[:8]
-        plan = {}
-        for q in args.queries.split(","):
-            cap = DIVERGENCE_CAPS.get(q)
-            ms = tuple(sorted(
-                int(m) for m in results.get(q, {})
-                if cap is None or int(m) <= cap))
-            if ms:
-                plan[q] = ms
-        mult_set = sorted({m for ms in plan.values() for m in ms})
-        amp_dirs, cons = {}, {}
-        for m in mult_set:
-            d = f"{args.out}/{src_tag}_amp{m}"
-            if not Path(d).exists():
-                print(f"amp dir missing, cells at {m}x skipped: {d}",
-                      file=sys.stderr)
-                plan = {q: tuple(x for x in ms if x != m)
-                        for q, ms in plan.items()}
-                continue
-            amp_dirs[m] = d
-            cons[m] = duck_con(d)
-    else:
-        mult_set = sorted({m for ms in plan.values() for m in ms})
-        only_tables = ([t for t in args.tables.split(",") if t]
-                       if args.tables else None)
-        amp_dirs = {m: build_amplified(spark, args.src, args.out, m,
-                                       tables=only_tables)
-                    for m in mult_set}
-        cons = {m: duck_con(d) for m, d in amp_dirs.items()}
-
-    if args.values_only:
-        # Verify values for already-recorded cells WITHOUT re-timing:
-        # re-measuring under dev-loop CPU contention would overwrite
-        # clean timings with noisy ones, and the value check needs no
-        # clock — one untimed execution per side, merge the verdict
-        # (and the current row counts) into the recorded cell.
-        from tools.parity import compare
-        for q, mults in plan.items():
-            spec = specs[q]
-            if spec.oracle is None:
-                continue
-            for m in mults:
-                cell = results.get(q, {}).get(str(m))
-                if cell is None:
-                    print(f"  {q}@{m}x: no recorded cell — run a "
-                          "timed pass first", file=sys.stderr)
-                    continue
-                if any(k in cell for k in
-                       ("duckdb_refusal", "duckdb_oom", "disk_refusal")):
-                    print(f"  {q}@{m}x: refusal cell, skipped",
-                          file=sys.stderr)
-                    continue
-                if q in VALUES_EXEMPT:
-                    cell["values_match"] = "exempt"
-                    cell["values_note"] = VALUES_EXEMPT[q]
-                    print(f"  {q}@{m}x: exempt", file=sys.stderr,
-                          flush=True)
-                else:
-                    set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
-                    # count first — NEVER pull an over-cap result into
-                    # pandas just to learn it is over the cap (the old
-                    # skip path materialized 87M-row frames for that)
-                    n_duck = cons[m].execute(
-                        f"SELECT COUNT(*) FROM ({spec.oracle}) AS __c"
-                    ).fetchone()[0]
-                    cell["duckdb_rows"] = int(n_duck)
-                    if n_duck > VALUES_ROW_CAP:
-                        try:
-                            ok, msg, s_n, _ = digest_compare(
-                                spec.fn(spark, amp_dirs[m]),
-                                cons[m], spec.oracle)
-                            cell["spark_rows"] = s_n
-                            cell["values_match"] = bool(ok)
-                            cell["values_note"] = msg
-                        except (duckdb.OutOfMemoryException,
-                                MemoryError) as e:
-                            cell["spark_rows"] = spec.fn(
-                                spark, amp_dirs[m]).count()
-                            cell["values_match"] = "skipped"
-                            cell["values_note"] = (
-                                "digest attempted; oracle refused "
-                                f"co-resident ({type(e).__name__}: "
-                                + " ".join(str(e).split())[:200]
-                                + "); row counts compared")
-                            if cell["spark_rows"] != cell["duckdb_rows"]:
-                                cell["values_match"] = False
-                                cell["values_note"] = "row counts differ"
-                    else:
-                        duck_pd = cons[m].execute(spec.oracle).df()
-                        spark_pd = spec.fn(spark, amp_dirs[m]).toPandas()
-                        cell["spark_rows"] = len(spark_pd)
-                        ok, msg = compare(spark_pd, duck_pd)
-                        cell["values_match"] = bool(ok)
-                        if ok:
-                            cell.pop("values_note", None)
-                        else:
-                            cell["values_note"] = msg
-                        del spark_pd, duck_pd
-                    print(f"  {q}@{m}x: values_match="
-                          f"{cell['values_match']}", file=sys.stderr,
-                          flush=True)
-                (REPO / "FLOORFREE.json").write_text(json.dumps(
-                    {"floorfree": results, "src": args.src,
-                     "job_floor_s": floor_s, "runs": args.runs,
-                     "partial": True}, indent=2) + "\n")
-        plan = {}
-
-    for q, mults in plan.items():
-        spec = specs[q]
-        if spec.oracle is None:
-            print(f"skip {q}: no oracle", file=sys.stderr)
-            continue
-        results.setdefault(q, {})
-        for m in mults:
-            cell = {"spark_s": None, "duckdb_s": None,
-                    "spark_rows": None, "duckdb_rows": None}
-            # reset the Arrow batch tier per cell, like the driver
-            # harness — a tier pinned by an earlier query in a full
-            # sweep (x3's VECTOR, mm2's BLOB) must not leak into this
-            # query's kernels. (The recorded r8 cells predate this
-            # line but were measured in dedicated --queries runs whose
-            # members pin no tier, so they already ran at the default.)
-            set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
-            # warm: build plan + fill page cache once, untimed
-            spec.fn(spark, amp_dirs[m]).write.format("noop") \
-                .mode("overwrite").save()
-            for _ in range(args.runs):
-                set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
-                t0 = time.time()
-                spec.fn(spark, amp_dirs[m]).write.format("noop") \
-                    .mode("overwrite").save()
-                dt = time.time() - t0
-                cell["spark_s"] = min(cell["spark_s"] or dt, dt)
-            duck_pd = None
-            try:
-                if args.duck_subproc:
-                    # Engine-symmetric ("full machine each") timing,
-                    # r16: Spark is timed with DuckDB idle, so DuckDB
-                    # must be timed with the JVM GONE — a fresh
-                    # subprocess alone is NOT enough (the resident 48g
-                    # JVM still inflated the identical dq1@4096x
-                    # oracle 39.5 s vs 14.5 s after JVM exit). Tear
-                    # the JVM down, time DuckDB in a clean process,
-                    # relaunch (~6 s) for the value check / next cell.
-                    import subprocess
-                    _teardown_jvm(spark)
-                    out = subprocess.run(
-                        [sys.executable, str(REPO / "tools/duck_time.py"),
-                         amp_dirs[m], q, str(args.runs)],
-                        capture_output=True, text=True, timeout=7200)
-                    if out.returncode != 0:
-                        raise RuntimeError(
-                            f"duck_time subprocess failed for {q}@{m}x: "
-                            + out.stderr[-1000:])
-                    sub = json.loads(out.stdout.strip().splitlines()[-1])
-                    spark = get_spark("floorfree")
-                    cons[m] = duck_con(amp_dirs[m])
-                    if "duckdb_refusal" in sub:
-                        cell["duckdb_refusal"] = sub["duckdb_refusal"]
-                    else:
-                        cell["duckdb_s"] = sub["duckdb_s"]
-                        cell["duckdb_rows"] = sub["duckdb_rows"]
-                        cell["duck_subproc"] = True
-                        # untimed in-process execution for the value
-                        # check (same frame the in-process path yields)
-                        duck_pd = cons[m].execute(spec.oracle).df()
-                else:
-                    for _ in range(args.runs):
-                        t0 = time.time()
-                        # .df() is DuckDB's native columnar
-                        # materialization (comparable cost to
-                        # fetchall, and it IS the form the value check
-                        # needs — no untimed re-execution of a
-                        # 5-minute oracle just to verify values)
-                        duck_pd = cons[m].execute(spec.oracle).df()
-                        dt = time.time() - t0
-                        cell["duckdb_s"] = min(cell["duckdb_s"] or dt, dt)
-                    cell["duckdb_rows"] = len(duck_pd)
-            except (duckdb.OutOfMemoryException, duckdb.IOException,
-                    OSError, MemoryError) as e:
-                # an oracle refusal (ENOSPC spill, OOM) is a RESULT,
-                # not a harness crash: record the u1-style asymmetric
-                # cell — Spark's wall stands, DuckDB's refusal message
-                # and time-to-refusal are the evidence (r11; keeps a
-                # 20-min Spark measurement from dying with the oracle).
-                # RESOURCE classes only — IOException/OSError also
-                # cover non-resource I/O faults (missing amplified
-                # parquet, bad scratch path), so the MESSAGE must carry
-                # a resource marker or the fault re-raises loudly
-                # instead of masquerading as a measured refusal
-                # (r12, ADVICE r11 item #1). OutOfMemoryException /
-                # MemoryError are resource classes by type.
-                if isinstance(e, (duckdb.IOException, OSError)) and \
-                        not isinstance(e, (duckdb.OutOfMemoryException,
-                                           MemoryError)):
-                    msg = str(e).lower()
-                    markers = ("no space", "enospc", "disk full",
-                               "out of memory", "could not allocate",
-                               "cannot allocate", "failed to allocate")
-                    if not any(t in msg for t in markers):
-                        raise
-                cell["duckdb_s"] = None
-                cell["duckdb_rows"] = None
-                cell["duckdb_refusal"] = (
-                    f"{type(e).__name__} after {time.time() - t0:.0f}s: "
-                    + " ".join(str(e).split())[:500])
-            # value verification (VERDICT r11 ask #2) — see VALUES_*.
-            # The oracle result's size gates the check BEFORE any extra
-            # Spark execution, and under the cap the Spark pull doubles
-            # as the row count (one extra execution total, not two).
-            if duck_pd is not None and q in VALUES_EXEMPT:
-                cell["spark_rows"] = spec.fn(spark, amp_dirs[m]).count()
-                cell["values_match"] = "exempt"
-                cell["values_note"] = VALUES_EXEMPT[q]
-            elif duck_pd is not None and len(duck_pd) <= VALUES_ROW_CAP:
-                from tools.parity import compare
-                spark_pd = spec.fn(spark, amp_dirs[m]).toPandas()
-                cell["spark_rows"] = len(spark_pd)
-                ok, msg = compare(spark_pd, duck_pd)
-                cell["values_match"] = bool(ok)
-                if not ok:
-                    cell["values_note"] = msg
-                del spark_pd
-            elif duck_pd is not None:
-                # over the pull cap: release the timed materialization
-                # FIRST (it is the memory hog), then verify values with
-                # the engine-side digest — three scalars cross the
-                # boundary instead of an 87M-row frame
-                n_duck = len(duck_pd)
-                cell["duckdb_rows"] = n_duck
-                duck_pd = None
-                try:
-                    ok, msg, s_n, _ = digest_compare(
-                        spec.fn(spark, amp_dirs[m]), cons[m], spec.oracle)
-                    cell["spark_rows"] = s_n
-                    cell["values_match"] = bool(ok)
-                    cell["values_note"] = msg
-                except (duckdb.OutOfMemoryException, MemoryError) as e:
-                    cell["spark_rows"] = spec.fn(spark, amp_dirs[m]).count()
-                    cell["values_match"] = "skipped"
-                    cell["values_note"] = (
-                        "digest attempted; oracle refused co-resident "
-                        f"({type(e).__name__}: "
-                        + " ".join(str(e).split())[:200]
-                        + "); row counts compared")
-                    if cell["spark_rows"] != n_duck:
-                        cell["values_match"] = False
-                        cell["values_note"] = "row counts differ"
-            else:
-                cell["spark_rows"] = spec.fn(spark, amp_dirs[m]).count()
-            duck_pd = None  # release before the next cell materializes
-            # ratio from RAW values: rounding duckdb_s first can make
-            # it 0.000 for a sub-ms oracle run and divide by zero
-            cell["ratio"] = (round(cell["spark_s"] / cell["duckdb_s"], 2)
-                             if cell["duckdb_s"] else None)
-            if q in RATIO_EXEMPT:
-                cell["ratio_exempt"] = RATIO_EXEMPT[q]
-            cell["floor_pct_of_spark"] = round(
-                100 * floor_s / cell["spark_s"], 1)
-            cell["spark_s"] = round(cell["spark_s"], 3)
-            if cell["duckdb_s"] is not None:
-                cell["duckdb_s"] = round(cell["duckdb_s"], 3)
-            # per-cell provenance: merged files can carry cells from
-            # different runs/sources, so the top-level src/runs only
-            # describe the LATEST run
-            cell["src"] = args.src
-            cell["runs"] = args.runs
-            results[q][str(m)] = cell
-            print(f"  {q} @{m}x: spark {cell['spark_s']}s "
-                  f"duckdb {cell['duckdb_s']}s ratio {cell['ratio']} "
-                  f"rows {cell['spark_rows']}/{cell['duckdb_rows']}",
-                  file=sys.stderr, flush=True)
-            # flush partials: a mid-run crash (OOM, eviction) keeps
-            # every completed cell
-            (REPO / "FLOORFREE.json").write_text(json.dumps(
-                {"floorfree": results, "src": args.src,
-                 "job_floor_s": floor_s, "runs": args.runs,
-                 "partial": True}, indent=2) + "\n")
-
-    print("| query | mult | spark s | duckdb s | spark/duckdb | "
-          "floor % of spark | rows match | values |")
-    print("|---|---|---|---|---|---|---|---|")
-    any_value_fail = False
-    for q, row in results.items():
-        for m, c in row.items():
-            # refusal cells (duckdb_oom / disk_refusal) carry no floor
-            # percentage and null rows — render '-' / 'refused', never
-            # crash the merge-and-write below and never let None ==
-            # None print as a rows-match True for a cell nobody ran
-            rows_ok = ("refused" if c["spark_rows"] is None
-                       or c["duckdb_rows"] is None
-                       else c["spark_rows"] == c["duckdb_rows"])
-            vals = c.get("values_match", "-")
-            if vals is False:
-                any_value_fail = True
-            print(f"| {q} | {m}x | {c['spark_s']} | {c['duckdb_s']} | "
-                  f"{c['ratio']} | {c.get('floor_pct_of_spark', '-')}% | "
-                  f"{rows_ok} | {vals} |")
-    payload = {"floorfree": results, "src": args.src,
-               "job_floor_s": floor_s, "runs": args.runs}
-    print(json.dumps(payload))
-    (REPO / "FLOORFREE.json").write_text(json.dumps(payload, indent=2) + "\n")
-    # a value mismatch on an amplified lane is a correctness failure
-    # the sf0.01 gate structurally couldn't see — fail the run
-    return 1 if any_value_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -11,6 +11,8 @@ through it; check a subset with ``pytest tests/test_parity.py -k <id>``.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pandas as pd
 
@@ -18,31 +20,18 @@ from data_warehouse_spark.io import TABLES
 
 
 def duck_connection(sf_dir: str,
-                    pattern: str = "{dir}/{t}.parquet",
                     skip_missing: bool = False) -> duckdb.DuckDBPyConnection:
-    """Register every fixture table as a DuckDB view. `pattern` adapts
-    the path layout (single-file fixtures vs floorfree's multi-part
-    directories) so this stays the one view-registration helper.
-    `skip_missing` tolerates absent tables (floorfree's table-limited
-    amplified builds): DuckDB binds read_parquet eagerly at CREATE
-    VIEW, so a missing table would otherwise fail registration of the
-    whole connection; a query touching a skipped table still fails
-    loudly (unknown view)."""
-    import os
-
+    """Register every fixture table ``{sf_dir}/{table}.parquet`` as a
+    DuckDB view. `skip_missing` tolerates absent tables: the benchmark's
+    generated `bi_queries` tables (``warehouse_bench/checks.py``) lack
+    the LLM fixture tables, and DuckDB binds read_parquet eagerly at
+    CREATE VIEW, so a missing table would otherwise fail registration
+    of the whole connection. A query touching a skipped table still
+    fails loudly (unknown view)."""
     con = duckdb.connect()
-    # Optional memory ceiling (e.g. "70GB"): under a limit DuckDB
-    # spills to its temp dir instead of growing until the kernel
-    # OOM-kills the WHOLE python process (harness + partial results).
-    # Used by the floorfree value sweeps, where a big oracle runs
-    # co-resident with a Spark JVM; unset = DuckDB's default.
-    lim = os.environ.get("SPARK_GRAFT_DUCKDB_MEM")
-    if lim:
-        con.sql(f"SET memory_limit='{lim}'")
     for t in TABLES:
-        path = pattern.format(dir=sf_dir, t=t)
-        if skip_missing and not os.path.exists(
-                os.path.join(sf_dir, f"{t}.parquet")):
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if skip_missing and not os.path.exists(path):
             continue
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
