@@ -141,6 +141,11 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     return df
 
 
+# Candidate-id rows above which the LSH verify prefilters drop their
+# broadcast hint (see bcast_id_cap).
+BCAST_ID_CAP = 10_000_000
+
+
 def bcast_id_cap() -> int:
     """Max candidate-id rows the LSH verify prefilters may BROADCAST
     (r17, VERDICT r16 ask #3). The tail-smallness argument behind the
@@ -154,11 +159,10 @@ def bcast_id_cap() -> int:
 
     Default 10M id rows ~ a few hundred MB of built hash relation
     (long keys) — guide §3.1's comfortable broadcast territory, two
-    orders of magnitude under the hard cap. Env-overridable so tests
-    exercise the fallback path and clusters with bigger executors can
-    raise it; read per call, not at import, so a test override works
-    on a live session."""
-    return int(os.environ.get("SPARK_GRAFT_BCAST_ID_CAP", "10000000"))
+    orders of magnitude under the hard cap. Read per call, not at
+    import, so a test that patches BCAST_ID_CAP reaches the fallback
+    path on a live session."""
+    return BCAST_ID_CAP
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

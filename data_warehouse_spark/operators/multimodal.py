@@ -4,11 +4,10 @@ by Arrow-batched `mapInPandas` stages.
 
 Design for 100 TB of media:
   - payloads never pass the driver; each mapInPandas task decodes its
-    Arrow batch only (batch size bounded by
-    spark.sql.execution.arrow.maxRecordsPerBatch — the mm queries pin
-    the BLOB tier, session.ARROW_BATCH_BLOB=1024 rows, sized so
-    rows x blob_bytes stays in the low hundreds of MB; the vector
-    tier's 262144 would build multi-GB batches from KB-scale media);
+    Arrow batch only, and Spark's default
+    spark.sql.execution.arrow.maxBytesPerBatch (64 MiB) caps each
+    batch by bytes, so KB- or MB-scale media never builds a multi-GB
+    batch under the session's 65,536-record cap;
   - metadata (format, dims, duration) lives in plain columns so
     filters/joins on it stay codegen'd and pushdown-able — only the
     decode itself pays the Python boundary;

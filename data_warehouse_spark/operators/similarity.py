@@ -25,35 +25,6 @@ from pyspark.sql import functions as F
 
 from data_warehouse_spark.io import bcast_id_cap, spread_for_compute
 
-# cosine_topk auto-kernel threshold on the optimizer's size estimate of
-# the input scan: below it the single-parse HOF expression wins (no
-# Python workers to feed, ~0.2 s less fixed cost); above it the Arrow
-# numpy matmul wins (measured 1.2 s vs 2.0 s HOF on a 3.2M x 64 scan —
-# the HOF lambda is interpreted per element, while the Arrow path is
-# bounded by scan+ship at ~1.4 GB/s and computes for free). Round-5
-# re-measurement put the crossover ABOVE a 512k x 64 scan (131 MB:
-# HOF 0.50 s vs Arrow 0.58 s best-of-3) and below 3.2M x 64 (820 MB:
-# Arrow wins 1.7x), so the cut sits at 256 MB.
-ARROW_MIN_PLAN_BYTES = 256 * 1024 * 1024
-
-
-# Optimizer estimates at/above this are the spark.sql.defaultSizeInBytes
-# "unknown" sentinel (Long.MaxValue by default) that non-file relations
-# (JDBC, RDD-backed, post-checkpoint scans) report — not a real size.
-_UNKNOWN_SIZE_FLOOR = 1 << 60
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate for df's plan (file-size based for
-    parquet scans) — free to read, no job runs. Returns 0 (= unknown,
-    routes kernel='auto' to the fixed-cost-free HOF path) when the
-    estimate is the defaultSizeInBytes sentinel: a tiny in-memory
-    relation would otherwise masquerade as a huge scan and pay Arrow
-    worker startup for nothing."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return 0 if size >= _UNKNOWN_SIZE_FLOOR else size
-
-
 def _dlit(x: float) -> str:
     """SQL double literal: decimal forms need the D suffix (Spark parses
     bare `0.1` as DECIMAL), scientific forms are already DOUBLE."""
@@ -80,18 +51,12 @@ def _bad_elem(x: Column) -> Column:
     return x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
 
 
-def _dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Dot product of two array columns as zip_with+aggregate.
-
-    `dim` is accepted for signature stability but no longer selects an
-    unrolled expression: round-4 measurements show the dim-term
-    GetArrayItem form losing to this HOF form EVERYWHERE — 2.8x slower
-    on cached join pairs (50 s vs 18 s per 3M single-core pair-dots at
-    dim 64) and ~8x slower over a parquet scan (each array index
-    re-reads the nested column). The HOF lambda builds in two py4j
-    calls and sums left-to-right, so plan-construction cost and values
-    are unchanged. cosine_topk keeps an explicit 'unrolled' kernel for
-    regression benchmarking only.
+def _dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product of two array columns as zip_with+aggregate, summed
+    left-to-right in double precision. One GetArrayItem per dimension
+    loses to this HOF form everywhere measured: each index re-reads the
+    nested column (2.8x slower on cached join pairs, ~8x over a parquet
+    scan).
     """
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
@@ -100,272 +65,77 @@ def _dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
         F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _dot_query(a: str, query_vec: list[float]) -> Column:
-    """Dot product of an array column (by name) against a literal query
-    vector — always unrolled into one SQL string (the vector length is
-    known by construction)."""
-    return F.expr(" + ".join(f"{_elem(a, i)} * {_dlit(x)}"
-                             for i, x in enumerate(query_vec)))
-
-
-def _norm(a: Column | str, dim: int | None = None) -> Column:
-    """L2 norm; `dim` accepted but inert (see _dot — HOF wins)."""
+def _norm(a: Column | str) -> Column:
+    """L2 norm, in the same HOF form as _dot."""
     a = F.col(a) if isinstance(a, str) else a
     return F.sqrt(F.aggregate(
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))
+def cosine(a: Column | str, b: Column | str) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _arrow_query_scan(df: DataFrame, vec_col: str, id_col: str,
-                      query_vec: list[float],
-                      prefilter_k: int | None = None) -> DataFrame:
-    """(id, cos_sim) via mapInArrow: one numpy matmul per Arrow batch
-    against a fixed query vector.
+def _norm_sql(vec_col: str) -> str:
+    return (f"SQRT(aggregate(`{vec_col}`, 0.0D, "
+            "(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))")
 
-    Why not the zip_with/aggregate column expression: Spark evaluates
-    higher-order-function lambdas interpreted, per element — measured
-    ~39x slower than DuckDB's vectorized list ops on a 3.2M x 64
-    brute-force scan (ddece72:FLOORFREE.json, round 3). And why mapInArrow over
-    a pandas_udf: the embedding ListArray flattens to its values
-    buffer without ever materializing a Python object per row, where
-    pandas hands the kernel a Series of per-row ndarrays that
-    np.stack must copy one object at a time.
 
-    float32 input upcast to float64, so values match the elementwise
-    double formula the oracle spells out (pairwise-vs-sequential
-    summation differs only in final ulps, absorbed by the shared
-    round 6). Rows with null/ragged embeddings fall back to a per-row
-    loop within the batch (never expected on real corpora).
+def _cos_sql(vec_col: str, query_vec: list[float], norm_sql: str) -> str:
+    """Cosine of an array column against a literal query vector, as ONE
+    SQL expression: the zip_with/aggregate dot product over the row
+    norm `norm_sql` times the query norm folded to a literal."""
+    import math
 
-    Round 7 measured — do not "optimize" this to float32: fp32
-    accumulation flips the round(...,6) value on ~1% of rows on the
-    real fixtures (4/500 at sf0.01, 1934/200k at the 1024x amplified
-    corpus; max raw delta 7.4e-8 straddles the 5e-7 rounding
-    boundary), which breaks the hash-compared oracle whenever a
-    boundary row reaches the top-k. The shipped lever is batch size
-    instead: the vector queries pin arrow.maxRecordsPerBatch to
-    ARROW_BATCH_VECTOR=262144 per action (session.set_arrow_batch;
-    1.165 -> 1.032 s best-of-3 on a 33.6M x 64 scan). The tier is
-    per-query, not session-wide — 262144 rows of KB-scale BLOBS would
-    be a multi-GB Arrow batch on the multimodal paths.
-
-    `prefilter_k`: emit only the rows that can still reach a global
-    top-k over ROUND(cos_sim, 6) — per batch, the top k raw sims plus
-    a 1e-6 safety margin (and every NaN, which Spark's descending sort
-    surfaces first). Proof a dropped row can't be a top-k answer: it
-    has raw sim < kth_in_batch - 1e-6, so its 6dp rounding is STRICTLY
-    below the kth row's rounding (round6(x) <= x + 5e-7 < kth - 5e-7
-    <= round6(kth)) — at least k rows beat it no matter how the global
-    tie-break falls. Cuts the rows shipped back JVM-side from n to
-    ~k * n_batches (measured 0.75 -> 0.64 s on a 33.6M x 64 scan,
-    round-6 diag) and bounds TakeOrderedAndProject's heap input.
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    out_schema = T.StructType([
-        df.schema[id_col], T.StructField("cos_sim", T.DoubleType()),
-    ])
-
-    def score_batches(batches):
-        for b in batches:
-            ids = b.column(b.schema.get_field_index(id_col))
-            emb = b.column(b.schema.get_field_index(vec_col))
-            if b.num_rows == 0:
-                continue
-            lens = np.diff(emb.offsets.to_numpy())
-            if emb.null_count == 0 and len(lens) and (lens == lens[0]).all():
-                flat = emb.flatten().to_numpy(zero_copy_only=False)
-                m = flat.reshape(-1, int(lens[0])).astype(np.float64)
-                sims = (m @ qv) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            else:
-                sims = np.full(b.num_rows, np.nan)
-                for i, v in enumerate(emb.to_pylist()):
-                    if v:
-                        a = np.asarray(v, dtype=np.float64)
-                        sims[i] = (a @ qv) / (np.sqrt((a * a).sum()) * qn)
-            if prefilter_k is not None and len(sims) > prefilter_k:
-                # kth largest over NaN-as-smallest (np.partition sorts
-                # NaN last, i.e. "largest" — use nan-safe copy)
-                finite = np.nan_to_num(sims, nan=-np.inf)
-                kth = np.partition(finite, len(finite) - prefilter_k)[
-                    len(finite) - prefilter_k]
-                mask = (finite >= kth - 1e-6) | np.isnan(sims)
-                ids = ids.filter(pa.array(mask))
-                sims = sims[mask]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sims, type=pa.float64())],
-                names=[id_col, "cos_sim"])
-
-    return df.select(id_col, vec_col).mapInArrow(score_batches, out_schema)
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+    arr = "array(" + ",".join(_dlit(x) for x in query_vec) + ")"
+    return (f"aggregate(zip_with(`{vec_col}`, {arr}, "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (a, x) -> a + x)"
+            f" / ({norm_sql} * {_dlit(qn)})")
 
 
 def cosine_topk(df: DataFrame, vec_col: str, id_col: str,
-                query_vec: list[float], k: int = 20,
-                kernel: str = "auto") -> DataFrame:
+                query_vec: list[float], k: int = 20) -> DataFrame:
     """X3: exact top-k by cosine vs a literal query vector. The ORDER
     BY + LIMIT compiles to TakeOrderedAndProject: per-partition heaps,
     driver merges k rows — constant driver memory at any table size.
 
-    Kernels (`kernel=`), all value-identical (round 6 absorbs final
-    ulps; verified equal on the fixtures):
-      auto      size-routed: HOF below ARROW_MIN_PLAN_BYTES (a small
-                scan is fixed-cost-bound, and HOF has no Python workers
-                to spin up), Arrow above it (measured 1.2 s vs HOF's
-                2.0 s and unrolled's 3.9 s at 3.2M x 64).
-      arrow     zero-copy Arrow->numpy matmul (_arrow_query_scan):
-                bounded by scan+ship, compute is free; the scale path.
-      hof       ONE-parse zip_with/aggregate expression with the query
-                norm folded to a literal — interpreted per element but
-                JVM-only, no worker startup; wins small scans.
-      unrolled  dim fused multiply-adds as one SQL string. Kept for
-                comparison: each of its 3*dim GetArrayItems re-reads
-                the nested column, so it LOSES to hof at every size
-                measured on this Spark build (0.49 s vs 0.34 s at
-                128k rows, 3.9 s vs 2.0 s at 3.2M).
+    The similarity is one zip_with/aggregate expression: interpreted
+    per element, but JVM-only, so there are no Python workers to start.
     """
-    import math
-
-    df = spread_for_compute(df)
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    if kernel == "auto":
-        kernel = ("arrow" if _plan_size_bytes(df) >= ARROW_MIN_PLAN_BYTES
-                  else "hof")
-    if kernel not in ("arrow", "unrolled", "hof"):
-        raise ValueError(f"unknown kernel: {kernel!r} "
-                         "(expected auto|arrow|unrolled|hof)")
-    if kernel == "arrow":
-        scored = _arrow_query_scan(df, vec_col, id_col, query_vec,
-                                   prefilter_k=k)
-    elif kernel == "unrolled":
-        sim = _dot_query(vec_col, query_vec) / (
-            _norm(vec_col, dim=len(query_vec)) * F.lit(qn))
-        scored = df.select(F.col(id_col), sim.alias("cos_sim"))
-    else:  # hof
-        arr = "array(" + ",".join(_dlit(x) for x in query_vec) + ")"
-        sim = F.expr(
-            f"aggregate(zip_with(`{vec_col}`, {arr}, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (a, x) -> a + x)"
-            f" / (SQRT(aggregate(`{vec_col}`, 0.0D, "
-            "(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-            f" * {_dlit(qn)})")
-        scored = df.select(F.col(id_col), sim.alias("cos_sim"))
-    return (scored.select(F.col(id_col),
-                          F.round("cos_sim", 6).alias("cos_sim"))
+    sim = F.expr(_cos_sql(vec_col, query_vec, _norm_sql(vec_col)))
+    return (spread_for_compute(df)
+            .select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
             .orderBy(F.col("cos_sim").desc(), F.col(id_col))
             .limit(k))
 
 
 def cosine_topk_multi(df: DataFrame, vec_col: str, id_col: str,
-                      query_vecs: list[list[float]], k: int = 20,
-                      kernel: str = "auto") -> DataFrame:
+                      query_vecs: list[list[float]], k: int = 20) -> DataFrame:
     """X3c: exact top-k for MANY query vectors in ONE scan — the
     amortized form of cosine_topk for batch retrieval (dedup probes,
     eval sets, reranker feeds). Returns (query_id, id_col, cos_sim)
     with query_id = position in `query_vecs`.
 
-    Scale shape: the expensive thing at 100 TB is the scan, so Q
-    queries must never mean Q scans. The Arrow kernel computes one
-    (batch x Q) matmul per Arrow batch and emits only each batch's
-    top-k rows per query, so the shuffle into the final per-query
-    rank carries <= Q * n_batches * k rows — never N x Q. The small-
-    scan HOF path evaluates Q sim expressions per row and explodes
-    (N x Q rows, fine below the size threshold where it runs).
+    Q queries never mean Q scans: each row's norm is computed once, the
+    Q similarity expressions are evaluated side by side and exploded,
+    and a per-query row_number keeps the top k.
     """
-    import math
-
     if not query_vecs:
         raise ValueError("query_vecs is empty")
     dims = {len(q) for q in query_vecs}
     if len(dims) != 1:
         raise ValueError(f"query vectors have mixed dimensions: {dims}")
 
-    df = spread_for_compute(df)
-    if kernel == "auto":
-        kernel = ("arrow" if _plan_size_bytes(df) >= ARROW_MIN_PLAN_BYTES
-                  else "hof")
-    if kernel not in ("arrow", "hof"):
-        raise ValueError(f"unknown kernel: {kernel!r} "
-                         "(expected auto|arrow|hof)")
-
-    if kernel == "arrow":
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        qm = np.asarray(query_vecs, dtype=np.float64)          # Q x dim
-        qn = np.sqrt((qm * qm).sum(axis=1))                    # Q
-        out_schema = T.StructType([
-            T.StructField("query_id", T.IntegerType()),
-            df.schema[id_col],
-            T.StructField("cos_sim", T.DoubleType()),
-        ])
-
-        def score_batches(batches):
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                ids = b.column(b.schema.get_field_index(id_col)) \
-                    .to_numpy(zero_copy_only=False)
-                emb = b.column(b.schema.get_field_index(vec_col))
-                lens = np.diff(emb.offsets.to_numpy())
-                if not (emb.null_count == 0 and len(lens)
-                        and (lens == lens[0]).all()):
-                    raise ValueError("null/ragged embeddings in batch")
-                m = (emb.flatten().to_numpy(zero_copy_only=False)
-                     .reshape(-1, int(lens[0])).astype(np.float64))
-                sims = (m @ qm.T) / (np.sqrt((m * m).sum(axis=1))[:, None] * qn)
-                top = min(k, len(ids))
-                # candidate selection mirrors the final (rounded desc,
-                # id asc) rank so no eventual winner is dropped.
-                # NaN sims (zero-norm or NaN-component embeddings) are
-                # mapped to +inf HERE because Spark's DESC ordering
-                # treats NaN as greatest: numpy's lexsort would sort
-                # them last and silently drop the row from candidates,
-                # making the two kernels disagree on degenerate
-                # vectors. This way both kernels surface them first —
-                # visibly, consistently — instead of diverging.
-                r = np.round(sims, 6)
-                r = np.where(np.isnan(r), np.inf, r)
-                out_q, out_i, out_s = [], [], []
-                for qi in range(qm.shape[0]):
-                    sel = np.lexsort((ids, -r[:, qi]))[:top]
-                    out_q.append(np.full(top, qi, dtype=np.int32))
-                    out_i.append(ids[sel])
-                    out_s.append(sims[sel, qi])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_q), type=pa.int32()),
-                     pa.array(np.concatenate(out_i)),
-                     pa.array(np.concatenate(out_s), type=pa.float64())],
-                    names=["query_id", id_col, "cos_sim"])
-
-        scored = df.select(id_col, vec_col).mapInArrow(
-            score_batches, out_schema)
-    else:  # hof — row norm hoisted, evaluated once per row not per query
-        sided = df.select(
-            F.col(id_col), F.col(vec_col),
-            F.expr(f"SQRT(aggregate(`{vec_col}`, 0.0D, "
-                   "(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))")
-            .alias("__nrm"))
-        sims = []
-        for qv in query_vecs:
-            qn = math.sqrt(sum(float(x) * float(x) for x in qv))
-            arr = "array(" + ",".join(_dlit(x) for x in qv) + ")"
-            sims.append(
-                f"aggregate(zip_with(`{vec_col}`, {arr}, "
-                "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (a, x) -> a + x)"
-                f" / (`__nrm` * {_dlit(qn)})")
-        scored = sided.select(
-            F.col(id_col),
-            F.posexplode(F.expr("array(" + ",".join(sims) + ")"))
-            .alias("query_id", "cos_sim"))
+    sided = spread_for_compute(df).select(
+        F.col(id_col), F.col(vec_col),
+        F.expr(_norm_sql(vec_col)).alias("__nrm"))
+    sims = [_cos_sql(vec_col, qv, "`__nrm`") for qv in query_vecs]
+    scored = sided.select(
+        F.col(id_col),
+        F.posexplode(F.expr("array(" + ",".join(sims) + ")"))
+        .alias("query_id", "cos_sim"))
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col(id_col))
@@ -430,12 +200,12 @@ def cosine_pairs_blocked(df: DataFrame, vec_col: str, id_col: str,
     # but the interpreted higher-order-function work per pair drops ~3x.
     df = spread_for_compute(df)
     sided = df.select(F.col(block_col).alias("block"), F.col(id_col),
-                      F.col(vec_col), _norm(vec_col, dim).alias("nrm"))
+                      F.col(vec_col), _norm(vec_col).alias("nrm"))
     a = sided.select("block", F.col(id_col).alias("id_a"),
                      F.col(vec_col).alias("va"), F.col("nrm").alias("na"))
     b = sided.select("block", F.col(id_col).alias("id_b"),
                      F.col(vec_col).alias("vb"), F.col("nrm").alias("nb"))
-    sim = _dot("va", "vb", dim) / (F.col("na") * F.col("nb"))
+    sim = _dot("va", "vb") / (F.col("na") * F.col("nb"))
     return (a.join(b, on="block")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("block", "id_a", "id_b", F.round(sim, 6).alias("cos_sim"))
@@ -520,10 +290,10 @@ def hyperplane_band_values(df: DataFrame, vec_col: str, id_col: str,
     — the cosine analogue of MinHash banding.
 
     Plan shape: one mapInArrow pass — the (batch x dim) @ (dim x
-    num_bits) sign matmul runs on the zero-copy Arrow values buffer,
-    like _arrow_query_scan. The hyperplanes are regenerated per worker
-    from the fixed seed (a dim x num_bits float64 array — microseconds,
-    no broadcast needed, deterministic everywhere)."""
+    num_bits) sign matmul runs on the zero-copy Arrow values buffer.
+    The hyperplanes are regenerated per worker from the fixed seed (a
+    dim x num_bits float64 array — microseconds, no broadcast needed,
+    deterministic everywhere)."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -801,7 +571,7 @@ class IvfIndex:
         q = F.array(*[F.lit(float(x)) for x in query_vec])
         best_cells = (self.centroids
                       .select("cell",
-                              cosine(F.col("cvec"), q, self.dim).alias("csim"))
+                              cosine(F.col("cvec"), q).alias("csim"))
                       .orderBy(F.col("csim").desc(), "cell").limit(nprobe)
                       .select("cell"))
         probed = self.assigned.join(F.broadcast(best_cells), on="cell")
@@ -1237,7 +1007,7 @@ def pq_encode(df: DataFrame, vec_col: str, id_col: str,
     the raw vectors never move after encode. Compose with the IVF
     half (build_ivf_index) for the standard IVF-PQ layout: cell
     prefilter bounds candidates, ADC ranks them, exact rerank on the
-    surviving tail (x3c's size-routed kernels).
+    surviving tail (cosine_topk_multi).
 
     Exactness contract with the oracle: subspace distances sum
     (x_t - c_t)^2 left-to-right in double over float32 inputs, the
@@ -1543,7 +1313,7 @@ def ivf_pq_topk(df: DataFrame, vec_col: str, id_col: str,
         iters=1, dim=len(query_vec), persist=False)
     best_cells = (idx.centroids
                   .select("cell",
-                          cosine(F.col("cvec"), q, idx.dim).alias("csim"))
+                          cosine(F.col("cvec"), q).alias("csim"))
                   .orderBy(F.col("csim").desc(), "cell").limit(nprobe)
                   .select("cell"))
     probed = idx.assigned.join(F.broadcast(best_cells), on="cell")
@@ -1566,6 +1336,6 @@ def ivf_pq_topk(df: DataFrame, vec_col: str, id_col: str,
                  .select(id_col))
     return (df.join(F.broadcast(shortlist), on=id_col)
             .select(id_col,
-                    F.round(cosine(F.col(vec_col), q, len(query_vec)), 6)
+                    F.round(cosine(F.col(vec_col), q), 6)
                      .alias("cos_sim"))
             .orderBy(F.col("cos_sim").desc(), id_col).limit(k))

@@ -24,9 +24,6 @@ from data_warehouse_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from data_warehouse_spark.queries.registry import register
-from data_warehouse_spark.session import (
-    ARROW_BATCH_BLOB, ARROW_BATCH_DEFAULT, set_arrow_batch,
-)
 
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -1174,7 +1171,6 @@ FROM documents
     tags=("ext", "multimodal"),
 )
 def mm1_multimodal_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_BLOB)  # opaque payload rows
     import pandas as pd
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1236,20 +1232,10 @@ def mm2_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_spark.operators.multimodal import (
         decode_images, png_blob_table, resize_plan,
     )
-    # the one-off payload-table BUILD (attach_png_blob's encode kernel,
-    # first call per sf_dir) ships real KB-scale blobs and must stay
-    # at the blob tier; it executes eagerly inside png_blob_table, so
-    # pin the tier around that call
-    set_arrow_batch(spark, ARROW_BATCH_BLOB)
-    # …but the QUERY itself reads only the 33-byte `hdr` column the
-    # ingest write landed next to the payload (r17, guide §6): the
-    # parquet scan's ReadSchema drops `blob` entirely — previously the
-    # scan read every payload byte just to substring 33 of them — and
-    # the pipeline runs at the default Arrow tier (the 1k-row blob
-    # tier would cost 64x the per-batch Python overhead for no memory
-    # benefit, r16)
+    # the query reads only the 33-byte `hdr` column the ingest write
+    # landed next to the payload: the parquet scan's ReadSchema drops
+    # `blob` entirely
     hdrs = png_blob_table(spark, sf_dir).select("doc_id", "hdr")
-    set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
     decoded = decode_images(hdrs, codec="png", hdr_col="hdr")
     # no presentation sort: a global orderBy would sample its child and
     # run the decode stage twice (see sessions._present_sorted); the
@@ -1276,7 +1262,6 @@ WHERE strlen(text) > 0
     tags=("ext", "multimodal"),
 )
 def mm3_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_BLOB)  # opaque payload rows
     from data_warehouse_spark.operators.multimodal import attach_blob, sample_frames
     docs = load_table(spark, sf_dir, "documents")
     frames = sample_frames(attach_blob(docs), frame_every_bytes=1024)
@@ -1370,7 +1355,6 @@ LIMIT 20
     tags=("ext", "multimodal", "vector"),
 )
 def mm4b_feature_ann_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_BLOB)  # opaque payload rows
     import pandas as pd
 
     from data_warehouse_spark.operators.multimodal import attach_blob

@@ -19,7 +19,6 @@ from data_warehouse_spark.operators.similarity import (
     cosine_topk_multi, ivf_topk,
 )
 from data_warehouse_spark.queries.registry import register
-from data_warehouse_spark.session import ARROW_BATCH_VECTOR, set_arrow_batch
 
 _COS_SQL = """
 list_sum(list_transform(range(1, 65), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
@@ -87,7 +86,6 @@ LIMIT 20
     tags=("ext", "vector"),
 )
 def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_topk(emb, vec_col="embedding", id_col="vec_id",
                        query_vec=_query_vec(spark, sf_dir), k=20)
@@ -170,7 +168,6 @@ ORDER BY cos_sim DESC, vec_id LIMIT 20
     tags=("ext", "vector"),
 )
 def x3b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(emb, vec_col="embedding", id_col="vec_id",
                     query_vec=_query_vec(spark, sf_dir), k=20,
@@ -197,17 +194,15 @@ SELECT CAST(query_id AS INT) AS query_id, vec_id, cos_sim
 FROM ranked WHERE rn <= 20
 """,
     doc="X3c [ext]: batched exact top-k — MANY query vectors scored in "
-        "ONE scan (operators/similarity.py:cosine_topk_multi). The "
-        "scan is the expensive thing at 100 TB, so Q queries must not "
-        "mean Q scans: the Arrow kernel does one (batch x Q) matmul "
-        "per Arrow batch and emits only per-batch top-k candidates, "
-        "bounding the final rank's shuffle at Q * n_batches * k rows. "
+        "ONE scan (operators/similarity.py:cosine_topk_multi). Q "
+        "queries must not mean Q scans: each row's norm is computed "
+        "once, the Q similarity expressions run side by side JVM-side "
+        "and explode, and a per-query row_number keeps the top k. "
         "query_id = the probing vector's own vec_id here (positions "
         "0,1,2).",
     tags=("ext", "vector"),
 )
 def x3c_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_topk_multi(emb, vec_col="embedding", id_col="vec_id",
                              query_vecs=_query_vecs(spark, sf_dir, (0, 1, 2)),
@@ -273,7 +268,6 @@ WHERE ROUND({_COS_SQL.format(a='a.embedding', b='b.embedding')}, 6) >= 0.9
     tags=("ext", "vector", "dedup"),
 )
 def x2d_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     copies = emb.select(_planted_copy_id().alias("vec_id"),
                         F.expr(_PERTURB_SPARK).alias("embedding"))
@@ -367,7 +361,6 @@ FROM a2 LEFT JOIN pruned p USING (vec_id)
 def x17_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_spark.operators.similarity import semantic_dedup
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     copies = emb.select(_planted_copy_id().alias("vec_id"),
                         F.expr(_PERTURB_SPARK).alias("embedding"))
@@ -512,7 +505,6 @@ FROM a2 LEFT JOIN pruned p USING (vec_id)
 def x17b_semdedup_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_spark.operators.similarity import semantic_dedup
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     ids = load_table(spark, sf_dir, "embeddings").select("vec_id")
     did = F.col("vec_id")
     pair = F.floor(did / 2).cast("long")
@@ -559,7 +551,6 @@ WHERE ROUND({_COS_SQL.format(a='a.embedding', b='b.embedding')}, 6) >= 0.25
     tags=("ext", "vector"),
 )
 def x4_pairwise_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)  # 64-float rows
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_pairs_blocked(emb, vec_col="embedding", id_col="vec_id",
                                 block_col="label", threshold=0.25,
@@ -636,7 +627,6 @@ def x3d_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebook_sample, pq_encode,
     )
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = pq_codebook_sample(emb, vec_col="embedding",
                                   id_col="vec_id", n_codes=16)
@@ -761,7 +751,6 @@ ORDER BY cos_sim DESC, vec_id LIMIT 20
 def x3e_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_spark.operators.similarity import ivf_pq_topk
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_pq_topk(emb, vec_col="embedding", id_col="vec_id",
                        query_vec=_query_vec(spark, sf_dir), k=20,
@@ -810,7 +799,6 @@ def x3f_ivfpq_arrow256(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_topk, pq_codebook_sample,
     )
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     cb = pq_codebook_sample(emb, vec_col="embedding", id_col="vec_id",
@@ -995,7 +983,6 @@ def x3g_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_topk, pq_codebook_train, pq_codeword_energy,
     )
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     cb = pq_codebook_train(emb, vec_col="embedding", id_col="vec_id",
@@ -1105,7 +1092,6 @@ def x3h_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index, extend_ivf_index,
     )
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
@@ -1220,7 +1206,6 @@ def x3i_ivf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index, extend_ivf_index, ivf_cell_stats,
     )
 
-    set_arrow_batch(spark, ARROW_BATCH_VECTOR)
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 5 != 0)

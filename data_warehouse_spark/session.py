@@ -16,39 +16,9 @@ from pyspark.sql import SparkSession
 # e.g. spark.sql.shuffle.partitions=8000 with adaptive enabled.
 LOCAL_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
-# Arrow batch sizing (spark.sql.execution.arrow.maxRecordsPerBatch).
-# One knob governs EVERY JVM<->Python Arrow exchange, and the right
-# value is payload-width-dependent, so each Arrow-kernel query pins the
-# tier it needs at build time (set_arrow_batch below) instead of one
-# session-wide bump:
-#   - DEFAULT (64k): narrow rows (scalars, token lists, point structs)
-#     — tens of MB per batch worst case, and 6x the stock 10k so
-#     per-batch Python overhead stays amortized.
-#   - VECTOR (256k): fixed-width embedding rows (64 float32 ~ 256 B)
-#     => ~64 MB per in-flight batch; measured 1.165 -> 1.032 s on x3's
-#     33.6M x 64 brute scan vs 64k batches (round 7).
-#   - BLOB (1k): opaque media payloads. Sizing rule: keep
-#     rows_per_batch * expected_blob_bytes ~ low hundreds of MB; at
-#     1024 rows that tolerates ~256 KB blobs, and MB-scale media should
-#     drop to ~256. The round-7 session-wide 256k default was sized for
-#     vector rows only — KB-scale blobs would have built multi-GB Arrow
-#     batches per task (round-8 advice fix).
+# Arrow batch size: Spark's default maxBytesPerBatch (64 MiB) bounds
+# wide rows, this record cap bounds narrow ones.
 ARROW_BATCH_DEFAULT = 65_536
-ARROW_BATCH_VECTOR = 262_144
-ARROW_BATCH_BLOB = 1_024
-
-
-def set_arrow_batch(spark: SparkSession, rows: int) -> None:
-    """Pin the Arrow exchange batch size for the NEXT action on this
-    session. Spark reads the conf when the physical plan executes (not
-    when the DataFrame is built), so query builders that ship wide or
-    narrow payloads through mapInArrow/mapInPandas call this right
-    before returning their DataFrame; the driver/bench executes it
-    immediately after. Harness entry points reset to
-    ARROW_BATCH_DEFAULT between queries so a tier never leaks into an
-    unrelated query's execution."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows))
 
 
 def default_master() -> str:
@@ -103,9 +73,6 @@ def get_spark(app_name: str = "data_warehouse_spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Session default is the narrow-row tier; vector/blob queries
-        # pin their own tier per action via set_arrow_batch (see the
-        # ARROW_BATCH_* sizing notes above).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_DEFAULT))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

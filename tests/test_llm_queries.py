@@ -1282,7 +1282,7 @@ def test_pq_codebook_train_improves_distortion_and_recall(spark, sf_dir):
         qarr = F.array(*[F.lit(float(x)) for x in qvs[qid]])
         from data_warehouse_spark.operators.similarity import cosine
         exacts[qid] = {r.vec_id for r in emb.select(
-            "vec_id", F.round(cosine(F.col("embedding"), qarr, 64), 6)
+            "vec_id", F.round(cosine(F.col("embedding"), qarr), 6)
             .alias("c"))
             .orderBy(F.col("c").desc(), "vec_id").limit(20).collect()}
     idx = build_ivf_index(emb, "embedding", "vec_id", n_cells=16,
@@ -1545,7 +1545,7 @@ def test_ivf_pq_256_codebook_serving_path(spark):
               .collect()[0][0]]
         qarr = F.array(*[F.lit(x) for x in qv])
         exact = {r.vec_id for r in df.select(
-            "vec_id", F.round(cosine(F.col("embedding"), qarr, dim), 6)
+            "vec_id", F.round(cosine(F.col("embedding"), qarr), 6)
             .alias("c"))
             .orderBy(F.col("c").desc(), "vec_id").limit(20).collect()}
         idx = build_ivf_index(df, "embedding", "vec_id", n_cells=16,

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from data_warehouse_spark import io
 from data_warehouse_spark.io import load_table
 from data_warehouse_spark.operators.dedup import (
     exact_dedup, minhash_lsh_pairs, simhash_near_pairs,
@@ -71,9 +72,8 @@ def test_lsh_broadcast_gate_falls_back_above_cap(spark, sf_dir, monkeypatch):
     """r17 (VERDICT r16 ask #3): the candidate-tail broadcast hints are
     size-gated. At an adversarial dup rate the tail is O(corpus) and
     the r16 unconditional hint would hard-fail at the 8 GB / 512M-row
-    broadcast cap; above the (env-overridable) cap the prefilter must
-    fall back to the unhinted shuffle semi-join with row-identical
-    output. The corpus below is fully duplicated (every doc has a
+    broadcast cap; above the cap the prefilter must fall back to the
+    unhinted shuffle semi-join with row-identical output. The corpus below is fully duplicated (every doc has a
     near-dup), modeling the adversarial rate; the cap is forced to 0
     so the fixture-sized tail takes the fallback path.
 
@@ -105,7 +105,7 @@ def test_lsh_broadcast_gate_falls_back_above_cap(spark, sf_dir, monkeypatch):
     hinted_rows, hints = run()
     assert hints > 0                           # normal-corpus hint intact
     assert len(hinted_rows) >= 40              # the dup rate really is ~100%
-    monkeypatch.setenv("SPARK_GRAFT_BCAST_ID_CAP", "0")
+    monkeypatch.setattr(io, "BCAST_ID_CAP", 0)
     fallback_rows, fallback_hints = run()
     assert fallback_rows == hinted_rows
     assert fallback_hints == 0                 # above the cap: no hint
@@ -132,7 +132,7 @@ def test_lsh_broadcast_gate_incremental_and_cosine(spark, sf_dir, monkeypatch):
         return inc, cos
 
     before = run_all()
-    monkeypatch.setenv("SPARK_GRAFT_BCAST_ID_CAP", "0")
+    monkeypatch.setattr(io, "BCAST_ID_CAP", 0)
     assert run_all() == before
 
 
@@ -708,10 +708,10 @@ def test_scd2_apply_close_insert_noop_newkey(spark):
     }
 
 
-def test_cosine_topk_multi_kernels_agree_and_match_single(spark):
-    """cosine_topk_multi: the Arrow batched-matmul kernel and the HOF
-    expression kernel return identical rows, and each query's slice
-    equals the single-query cosine_topk answer."""
+def test_cosine_topk_multi_matches_single(spark):
+    """cosine_topk_multi: each query's slice equals the single-query
+    cosine_topk answer, and empty or mixed-dimension query lists fail
+    loudly."""
     from data_warehouse_spark.io import load_table
     from data_warehouse_spark.operators.similarity import (
         cosine_topk, cosine_topk_multi,
@@ -722,25 +722,57 @@ def test_cosine_topk_multi_kernels_agree_and_match_single(spark):
     emb = load_table(spark, sf, "embeddings")
     qvs = _query_vecs(spark, sf, (0, 1, 2))
 
-    def rows(kernel):
-        return sorted(
-            (r.query_id, r.vec_id, r.cos_sim) for r in
-            cosine_topk_multi(emb, "embedding", "vec_id", qvs, k=5,
-                              kernel=kernel).collect())
-
-    hof, arrow = rows("hof"), rows("arrow")
-    assert hof == arrow
+    multi = sorted(
+        (r.query_id, r.vec_id, r.cos_sim) for r in
+        cosine_topk_multi(emb, "embedding", "vec_id", qvs, k=5).collect())
     single = sorted(
         (qi, r.vec_id, r.cos_sim)
         for qi, qv in enumerate(qvs)
         for r in cosine_topk(emb, "embedding", "vec_id", qv, k=5).collect())
-    assert hof == single
+    assert multi == single
 
-    import pytest
     with pytest.raises(ValueError, match="empty"):
         cosine_topk_multi(emb, "embedding", "vec_id", [], k=5)
     with pytest.raises(ValueError, match="mixed"):
         cosine_topk_multi(emb, "embedding", "vec_id", [[1.0], [1.0, 2.0]])
+
+
+def _arrow_batch_shapes(df):
+    """(rows, payload bytes) of every Arrow batch mapInPandas hands the
+    Python worker for df's single `v` column."""
+    import pandas as pd
+
+    def shapes(batches):
+        for b in batches:
+            yield pd.DataFrame({"rows": [len(b)],
+                                "nbytes": [int(b["v"].map(len).sum())]})
+
+    return [(r.rows, r.nbytes) for r in
+            df.mapInPandas(shapes, "rows long, nbytes long").collect()]
+
+
+def test_arrow_batches_are_bounded_by_bytes_and_records(spark):
+    """Every mapInPandas/mapInArrow kernel sees batches bounded two
+    ways with the session's defaults: wide rows by Spark's
+    maxBytesPerBatch (64 MiB), narrow rows by the 65,536-record cap.
+    If a Spark upgrade drops the byte cap, KB-scale media rows would
+    build batches of rows x blob bytes and this test fails."""
+    from data_warehouse_spark.session import ARROW_BATCH_DEFAULT
+
+    cap = 64 * 1024 * 1024
+    wide = spark.range(10_000, numPartitions=1).select(
+        F.expr("CAST(repeat('x', 10000) AS BINARY)").alias("v"))
+    batches = _arrow_batch_shapes(wide)
+    assert sum(n for n, _ in batches) == 10_000
+    assert len(batches) > 1
+    assert all(nbytes <= cap for _, nbytes in batches), batches
+
+    narrow = spark.range(ARROW_BATCH_DEFAULT * 2 + 1000, numPartitions=1) \
+        .select(F.col("id").cast("string").alias("v"))
+    batches = _arrow_batch_shapes(narrow)
+    assert sum(n for n, _ in batches) == ARROW_BATCH_DEFAULT * 2 + 1000
+    assert len(batches) > 1
+    assert all(n <= ARROW_BATCH_DEFAULT for n, _ in batches), batches
 
 
 def test_scd2_apply_guards_and_late_updates(spark):

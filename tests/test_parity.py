@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from data_warehouse_spark.queries.registry import load_all
-from data_warehouse_spark.session import ARROW_BATCH_DEFAULT, set_arrow_batch
+from data_warehouse_spark.session import ARROW_BATCH_DEFAULT
 from tools.parity import compare, duck_connection
 
 SF_PARITY = "/root/testdata/sf0.01"
@@ -27,9 +27,10 @@ def duck():
 @pytest.mark.parametrize("name", list(SPECS))
 def test_query_matches_oracle(spark, duck, name):
     spec = SPECS[name]
-    # Vector and blob queries pin their own Arrow tier at build time;
-    # start every query from the default so no tier leaks into the next.
-    set_arrow_batch(spark, ARROW_BATCH_DEFAULT)
     got = spec.fn(spark, SF_PARITY).toPandas()
+    # Builders leave session state alone: a conf a query set would leak
+    # into every query the shared session runs after it.
+    assert (spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+            == str(ARROW_BATCH_DEFAULT)), f"{name} changed the Arrow batch size"
     ok, msg = compare(got, duck.sql(spec.oracle).df())
     assert ok, f"{name}: {msg}"

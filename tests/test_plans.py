@@ -194,9 +194,8 @@ def test_runtime_bloom_filter_fires_on_fact_fact_join(spark):
 
 
 def test_x3_small_scan_kernel_stays_jvm_side(spark):
-    """Below ARROW_MIN_PLAN_BYTES the auto kernel is the one-parse HOF
-    expression: no Python evaluation node may appear in the scoring
-    plan (the Arrow matmul path only pays off on large scans)."""
+    """x3 scores with the one-parse HOF expression at every input size:
+    no Python evaluation node may appear in the scoring plan."""
     plan = executed_plan(q(spark, "x3_cosine_topk"))
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                    "FlatMapsInPandas", "MapInPandas"):
@@ -369,32 +368,6 @@ def test_a13_histogram_is_scan_shaped(spark):
 def test_f13_url_parse_is_map_only(spark):
     # parse_url must stay a projection: no shuffle anywhere
     assert count_exchanges(q(spark, "f13_url_parse")) == 0
-
-
-def test_x3_kernel_routing_responds_to_plan_size(spark, monkeypatch):
-    """ARROW_MIN_PLAN_BYTES (similarity.py) is measurement-derived; pin
-    BOTH routing directions so a Spark upgrade can't silently flip the
-    auto kernel: parquet scans must report a real optimizer size
-    estimate (nonzero, below the unknown sentinel), in-memory relations
-    must report unknown->0 (HOF route, no Arrow worker startup for tiny
-    inputs), and dropping the threshold below the scan size must flip
-    auto to the Arrow matmul kernel."""
-    from data_warehouse_spark.io import load_table
-    from data_warehouse_spark.operators import similarity as sim
-
-    emb = load_table(spark, SF, "embeddings")
-    size = sim._plan_size_bytes(emb)
-    assert 0 < size < sim._UNKNOWN_SIZE_FLOOR
-    mem = spark.createDataFrame([(1, [0.1] * 4)], "id long, v array<float>")
-    assert sim._plan_size_bytes(mem) == 0
-
-    qv = [float(x) for x in emb.select("embedding").first()[0]]
-    monkeypatch.setattr(sim, "ARROW_MIN_PLAN_BYTES", 1)
-    plan = executed_plan(
-        sim.cosine_topk(emb, "embedding", "vec_id", qv, k=5))
-    assert "MapInArrow" in plan
-    # x3's small-scan HOF direction is pinned by
-    # test_x3_small_scan_kernel_stays_jvm_side above
 
 
 def test_ngram_oversized_block_routes_through_lsh(spark):

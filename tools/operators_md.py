@@ -4,12 +4,8 @@ operator library (round-13, VERDICT r12 ask #8).
 Everything mechanical is EXTRACTED from source so it cannot rot:
 signature (ast), contract (first docstring paragraph), used-by
 (registry query modules whose code names the function), tested-in
-(test files whose code names it). The one curated field —
-the 100 TB design argument, one line — lives in SCALE_NOTES below and
-is validated TWO-WAY: a public operator without a note fails this
-tool, and a note naming a vanished operator fails it too.
-tests/test_generated_docs.py fails when OPERATORS.md differs from what
-this tool generates.
+(test files whose code names it). tests/test_generated_docs.py fails
+when OPERATORS.md differs from what this tool generates.
 
 Usage:
     python tools/operators_md.py           # (re)write OPERATORS.md
@@ -25,10 +21,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "data_warehouse_spark"
 
-# Modules whose public functions form the operator library. functions/*
-# are scalar expression helpers: map-only by construction, so they get
-# the standing auto-note instead of a curated one.
-OPERATOR_MODULES = [
+# Modules whose public functions form the operator library, then the
+# scalar expression helpers in functions/*.
+MODULES = [
     "operators/bucketing.py", "operators/chunking.py",
     "operators/dedup.py", "operators/graph.py",
     "operators/joins.py", "operators/maintenance.py", "operators/merge.py",
@@ -36,324 +31,9 @@ OPERATOR_MODULES = [
     "operators/sessionize.py", "operators/similarity.py",
     "operators/skew.py", "operators/snapshots.py", "operators/spatial.py",
     "operators/validation.py", "streaming/jobs.py",
-]
-EXPRESSION_MODULES = [
     "functions/colref.py", "functions/geo.py", "functions/png.py",
     "functions/text.py", "functions/timeutils.py",
 ]
-EXPRESSION_NOTE = ("pure column expression / Arrow-batched scalar — "
-                   "map-only, no shuffle, scales with the scan")
-
-# The 100 TB design argument, one line per operator. Keep these claims
-# consistent with SCALE.md — the judge cross-checks.
-SCALE_NOTES = {
-    "bucketing.write_bucketed":
-        "pays the join/window shuffle ONCE at write; repartition-before-"
-        "write gives one file per bucket so scans report sort order",
-    "bucketing.bucketed_view":
-        "session-cached one-off ETL; every later join/groupBy/window on "
-        "the key is exchange-free (j12/e1b plan-asserted)",
-    "bucketing.zorder_cell":
-        "normalizes to the observed range so cells stay balanced at any "
-        "data distribution; pure column math",
-    "bucketing.zorder_key":
-        "bit-interleave as shift/and/or expressions — codegen, no UDF",
-    "bucketing.write_zordered":
-        "range-partition + in-partition sort = disjoint, tight row "
-        "groups; 2-D predicate scans skip files by min/max (u8)",
-    "dedup.exact_dedup":
-        "sha2 groupBy — map-side combine, one shuffle of (hash, id), "
-        "text never shuffles; floor-free 0.22x @1024x",
-    "dedup.shingles":
-        "expression-only n-grams; explodes at the consumer, so shuffle "
-        "volume is decided there, not here",
-    "dedup.minhash_signatures":
-        "one explode + min-agg per doc: shuffle carries (id, 32 longs), "
-        "never shingle text",
-    "dedup.minhash_lsh_pairs":
-        "banded equi-join, never all-pairs; candidate tail exact-"
-        "verified; registry-wide cartesian ban plan-asserted",
-    "dedup.minhash_lsh_incremental":
-        "probes a persisted (band,bucket) index with O(batch) shingling; "
-        "corpus text touched only for the left-semi-pruned candidate "
-        "tail (x2g)",
-    "dedup.minhash_band_index":
-        "THE persisted artifact: write once bucketed by (band,bucket); "
-        "every daily probe joins it with zero index-side Exchange "
-        "(plan-asserted)",
-    "dedup.probe_candidates":
-        "the probe join alone: batch-side shuffle only; index side "
-        "co-located (test_bucketing.py pins bucketed vs plain = 1 vs 2 "
-        "key exchanges)",
-    "dedup.minhash_probe_index":
-        "daily probe vs persisted index: O(batch) compute + one "
-        "co-located index pass; candidate texts fetched by id "
-        "(point-lookup model), never a corpus text scan (.r13 lane: "
-        "probe-minus-scan flat 64x-4096x)",
-    "dedup.simhash_fingerprints":
-        "per-token hash votes aggregate map-side; fingerprint is one "
-        "long per doc",
-    "dedup.simhash_pairs_from_fingerprints":
-        "Manku chunk banding: pigeonhole guarantees recall at "
-        "max_hamming; equi-join on chunks, never all-pairs",
-    "dedup.simhash_near_pairs":
-        "fingerprint + banding + exact hamming verify — all shuffles "
-        "carry 64-bit values",
-    "dedup.oversized_blocks":
-        "bounded driver-side routing list (capped, fails loud) — the "
-        "decision input, not a data flow",
-    "dedup.split_oversized":
-        "broadcast semi/anti split against a <=10k key list — no "
-        "shuffle of the big side",
-    "dedup.ngram_jaccard_pairs":
-        "block-bounded quadratic; oversized blocks auto-route through "
-        "the LSH prefilter (plan-asserted routing)",
-    "dedup.shared_spans":
-        "Lee et al. exact-substring: rolling md5-60 fingerprints, "
-        "hot-hash cap kills boilerplate cliques pre-join, K-pass "
-        "hash-range decomposition bounds per-pass spill (~16 GB/pass)",
-    "dedup.remove_shared_spans":
-        "interval-merge + splice over the span report — shuffles "
-        "(id, offsets), re-reads text once",
-    "dedup.remove_shared_spans_to_fixpoint":
-        "per-round checkpoint; rounds are data-bounded (each must cut "
-        "something); splice-junction class converges in 2-3 rounds",
-    "graph.connected_components":
-        "min-label propagation with per-round localCheckpoint; O(D) "
-        "rounds — right for clique-like dedup graphs (D small)",
-    "graph.connected_components_stars":
-        "Kiveris alternating stars: O(log^2 n) rounds regardless of "
-        "diameter; @1024x measured 0.02x vs single-node recursion",
-    "graph.connected_components_auto":
-        "probes 8 min-label rounds, contracts partial labels, hands "
-        "the quotient to stars — probe work kept; exactness "
-        "property-tested across regimes",
-    "joins.asof_join":
-        "union + per-key window (one shuffle each side, no range "
-        "explosion); j6 floor-free 0.07x-0.27x, digest-verified to "
-        "4096x",
-    "joins.range_join_bucketed":
-        "rewrites BETWEEN into bucket equi-join + residual filter — "
-        "hash join, never BNL (plan-asserted)",
-    "maintenance.delete_by_keys":
-        "rewrites only partitions containing doomed rows (pruned scan "
-        "+ overwrite_partitions): one key-sorted file each; "
-        "O(touched), not O(table)",
-    "maintenance.compact_partitions":
-        "one read + overwrite_partitions: one file per date, AQE-split "
-        "only above the advisory size (never one task per huge day); "
-        "row content untouched (tested)",
-    "merge.upsert":
-        "key-join algebra, shuffles keys not payloads where possible; "
-        "last-writer-wins deterministic via order_col",
-    "merge.dedup_latest":
-        "row_number()=1 over a per-key window — one shuffle on the "
-        "keys, no driver state",
-    "merge.dedup_by_key":
-        "dropDuplicates — Spark's native partial-agg dedup",
-    "merge.scd2_apply":
-        "joins batch vs CURRENT slice only (history never rescanned); "
-        "closes + inserts in one write",
-    "merge.incremental_rollup":
-        "merges pre-aggregated deltas — nightly cost O(delta), "
-        "history never rescanned (plan-asserted)",
-    "merge.merge_into_partitioned":
-        "rewrites ONLY the date partitions the batch touches, each as "
-        "one key-sorted file (overwrite_partitions); partition-pruned "
-        "read-back (the 100 TB daily upsert; U1)",
-    "merge.overwrite_partitions":
-        "the one dynamic-overwrite writer: rebalance on dt lets AQE "
-        "coalesce small dates to one file and split huge ones into "
-        "bounded files; key sort tightens parquet stats",
-    "merge.target_exists":
-        "one filesystem metadata call via the Hadoop FS API — never "
-        "infers existence from read failures",
-    "multimodal.attach_blob":
-        "opaque binary + typed metadata — the storage shape; map-only",
-    "multimodal.attach_png_blob":
-        "real PNG encode in Arrow batches; map-only",
-    "multimodal.png_blob_table":
-        "payloads materialized once per fixture mtime, then scanned — "
-        "encode cost amortized across queries",
-    "multimodal.decode_images":
-        "Arrow-batched decode, per-unit error rows (ok=false) instead "
-        "of task failures; map-only",
-    "multimodal.resize_plan":
-        "integer column math for output dims — the kernel's control "
-        "plane, zero Python in the hot path",
-    "multimodal.sample_frames":
-        "UDTF-shaped explode driven by metadata — output rows bounded "
-        "by rows-per-KiB, map-only",
-    "sampling.token_budget_sample_scalable":
-        "two-phase distributed prefix sum — (stratum, chunk) windows, "
-        "never one reducer per stratum (plan-asserted)",
-    "sampling.sequence_pack":
-        "deterministic concat order + fixed-length chop via the same "
-        "chunked prefix sum; shuffle carries offsets, not text",
-    "sampling.prefix_sum_scalable":
-        "the shared two-phase decomposition: chunk-local sums + "
-        "broadcast chunk offsets (x14b/x19)",
-    "sessionize.with_session_id":
-        "lag + running sum over one (key, ts) shuffle; bucketed "
-        "layouts make it exchange-free (e1b plan-asserted)",
-    "sessionize.sessionize":
-        "window + agg share ONE exchange (plan-asserted); w5 "
-        "floor-free 0.27x, digest-verified to 4096x",
-    "similarity.cosine":
-        "F.aggregate over zipped arrays — JVM-side, no UDF",
-    "similarity.cosine_topk":
-        "TakeOrderedAndProject: per-partition heaps, driver merges k "
-        "rows — no global sort (plan-asserted)",
-    "similarity.cosine_topk_multi":
-        "Q queries in ONE corpus scan (size-routed JVM/Arrow kernel) — "
-        "amortizes the scan that dominates at corpus scale",
-    "similarity.cosine_pairs_blocked":
-        "block-bounded quadratic, AQE-skew-handled hash join; "
-        "oversized blocks auto-route through the IVF sub-split",
-    "similarity.semantic_dedup":
-        "SemDeDup: quadratic term is sum of cell^2, never corpus^2; "
-        "n_cells scales with the corpus (x17b exercises the knob), "
-        "oversized cells sub-split",
-    "similarity.hyperplane_band_values":
-        "one mapInArrow sign-matmul pass; hyperplanes regenerated per "
-        "worker from the seed (nothing shipped)",
-    "similarity.cosine_lsh_pairs":
-        "blocking-key-free near-dup: band equi-join proposes, exact "
-        "cosine verifies the candidate tail only (x2d 0.09x)",
-    "similarity.build_ivf_centroids":
-        "Lloyd as DataFrame ops; centroids stay a broadcastable "
-        "n_cells-row side",
-    "similarity.assign_cells":
-        "map-only Arrow argmax matmul, ZERO exchange (plan-asserted); "
-        "the round-6 broadcast-join form shuffled N x n_cells rows",
-    "similarity.build_ivf_index":
-        "the one corpus-sized computation, paid once; probes touch "
-        "nprobe cells only",
-    "similarity.extend_ivf_index":
-        "index growth is O(|batch| * n_cells) against existing "
-        "centroids — the indexed corpus is never re-scanned; rebuild "
-        "on cell-size skew",
-    "similarity.ivf_topk":
-        "one-shot build+probe convenience; repeated queries use the "
-        "persisted index (x3b/x3c)",
-    "similarity.pq_codebook_sample":
-        "16-row md5-ordered parameter read — deterministic, "
-        "engine-replayable codebook seeding (no training shuffle)",
-    "similarity.pq_codebook_train":
-        "Lloyd refinement as one distributed pass per iteration "
-        "(argmin codes + posexplode mean), n_codes*dim parameter-read "
-        "collect; -37% distortion vs the sampled seed, but ranking "
-        "(ADC/recall) is corpus-dependent at 16 codewords — measured "
-        "in SCALE.md's r14 lane, which is why the oracle keeps the "
-        "sampled book",
-    "similarity.pq_codeword_energy":
-        "ADC bias-correction table (Jégou): one distributed pass + "
-        "n_sub*n_codes parameter read; correction bakes into the LUT "
-        "literals so the probe plan stays map-only",
-    "similarity.pq_encode_arrow":
-        "the >32-codeword auto-route and the corpus-scale encode path: "
-        "one mapInArrow pass, (n x k) per subspace via the x2+c2-2xc "
-        "expansion; 9.5x faster than the expr plan even at 16 codes "
-        "on a 1M-row encode (SCALE.md r14 addendum 2)",
-    "similarity.pq_encode":
-        "map-only encode with the codebook as ~8 KB of literals: 32x "
-        "index compression (8 code bytes vs 256 float bytes), ADC "
-        "scores read codes only — zero exchange (plan-asserted)",
-    "similarity.ivf_pq_topk":
-        "IVF-PQ probe: nprobe cells bound candidates, ADC reads the "
-        "32x-compressed codes, exact cosine touches only the "
-        "k*rerank broadcast shortlist; with a prebuilt index+codebook "
-        "no corpus scan per probe (the no-index form is the one-shot "
-        "convenience, like ivf_topk)",
-    "sampling.mixture_schedule":
-        "stride-scheduled source mixing: per-stratum rank via the "
-        "two-phase prefix sum (strata x chunks parallelism), global "
-        "order is a vtime sort key for the writer's range-sort — no "
-        "single-reducer anywhere",
-    "chunking.n_chunks_for":
-        "pure column arithmetic shared with the oracle's ceil — exact "
-        "chunk counts at any doc length",
-    "chunking.chunk_overlapping":
-        "scan -> Generate -> Project, ZERO exchanges (plan-asserted); "
-        "output amplification is per-split, writer owns partitioning",
-    "skew.with_salt":
-        "deterministic row salt — no monotonically_increasing_id "
-        "(stable under retries)",
-    "skew.salted_agg":
-        "two-phase agg: salted partials then final — hot keys spread "
-        "across salt_buckets tasks (a7)",
-    "similarity.rebuild_index_if_drifted":
-        "monitor-then-retrain in one call: 1-row stats read, rebuild "
-        "only past the skew threshold — appends stay O(batch) "
-        "between rebuilds",
-    "similarity.ivf_cell_stats":
-        "drift monitor: one map-side-combined groupBy to n_cells "
-        "rows + 1-row aggregate — rebuild decision with no collect "
-        "at any index size (x3i)",
-    "snapshots.versions":
-        "directory listing of manifests — metadata only",
-    "snapshots.expire_versions":
-        "retention: atomic manifest-rename expiry per doomed version "
-        "— metadata decision + O(expired bytes) deletes, surviving "
-        "data never scanned (u9c)",
-    "snapshots.gc_orphans":
-        "crashed-writer GC: O(debris) listing with grace + live-lock "
-        "safety — committed data never touched (u9c)",
-    "snapshots.erase_keys_all_versions":
-        "erasure x time travel: per-version semi-probe then anti-join "
-        "rewrite + atomic manifest swap — O(versions holding the "
-        "keys), never O(history) (u5b)",
-    "snapshots.write_snapshot":
-        "manifest rename is the commit point; single-writer lock per "
-        "version; raced + SIGKILLed in tests",
-    "snapshots.read_snapshot":
-        "time travel = read the manifest's data dir; immutable "
-        "versions, no compaction reads",
-    "snapshots.snapshot_changes":
-        "CDC diff joins exactly two versions' data — O(two versions), "
-        "not O(history)",
-    "spatial.grid_spatial_join":
-        "grid-cell prefilter turns point-in-box into an equi-join; "
-        "candidate tail exact-verified (j9)",
-    "spatial.point_in_polygon_exact":
-        "grid prefilter + exact ray-cast Arrow kernel on the "
-        "candidate tail; digest-verified to 4096x",
-    "validation.validation_report":
-        "all rules in ONE aggregate pass over the scan "
-        "(plan-asserted) — rules add expressions, not jobs",
-    "jobs.read_documents_stream":
-        "file-source stream, projection pruned to dedup columns",
-    "jobs.read_events_stream":
-        "file-source stream; maxFilesPerTrigger emulates "
-        "snapshot-at-a-time arrival",
-    "jobs.tumbling_counts":
-        "watermark bounds state to open windows; late data dropped "
-        "deterministically (st5-tested)",
-    "jobs.sliding_counts":
-        "state bounded by windows-per-slide; same watermark "
-        "discipline",
-    "jobs.session_aggs":
-        "session windows with watermark — state = open sessions only",
-    "jobs.dedup_stream":
-        "dropDuplicates keyed on the PK; watermark expires state",
-    "jobs.dedup_retries_stream":
-        "dropDuplicatesWithinWatermark — state bounded by the "
-        "redelivery horizon",
-    "jobs.attribution_join":
-        "stream-stream interval join; watermarks bound both buffers",
-    "jobs.start_memory_sink":
-        "test/drive harness — not a production sink",
-    "jobs.run_foreach_batch_upsert":
-        "merge-per-batch through merge_into_partitioned (partition-"
-        "scoped rewrites); SIGKILL-mid-write + checkpoint replay "
-        "converges (tested)",
-    "jobs.running_user_stats":
-        "applyInPandasWithState, event-time expiry: state bounded by "
-        "active users within the idle gap",
-    "jobs.run_microbatch_append":
-        "epoch-keyed overwrite = replay-idempotent append; commit log "
-        "is driver-side metadata (exactly-once tested incl. SIGKILL)",
-}
 
 
 def _sig(fn: ast.FunctionDef) -> str:
@@ -419,30 +99,16 @@ def generate() -> str:
         "`--check` fails on drift. -->",
         "",
         "One entry per public function: signature, contract (first "
-        "docstring paragraph), the 100 TB design argument in one "
-        "line, and where it is exercised (registry query modules / "
-        "test files whose code names it — extracted, so the pointers "
-        "cannot rot).",
+        "docstring paragraph), and where it is exercised (registry "
+        "query modules / test files whose code names it — extracted, "
+        "so the pointers cannot rot).",
         "",
     ]
-    seen_notes = set()
-    for rel in OPERATOR_MODULES + EXPRESSION_MODULES:
+    for rel in MODULES:
         path = PKG / rel
-        mod = path.stem if path.stem != "jobs" else "jobs"
         out.append(f"## {rel}")
         out.append("")
         for fn in _public_fns(path):
-            key = f"{mod}.{fn.name}"
-            if rel in EXPRESSION_MODULES:
-                note = EXPRESSION_NOTE
-            else:
-                if key not in SCALE_NOTES:
-                    raise SystemExit(
-                        f"SCALE_NOTES missing entry for {key} — every "
-                        "public operator needs its one-line 100 TB "
-                        "argument (add it in tools/operators_md.py)")
-                note = SCALE_NOTES[key]
-                seen_notes.add(key)
             used = sorted(q for q, ids in queries.items()
                           if fn.name in ids)
             tst = sorted(t for t, ids in tests.items() if fn.name in ids)
@@ -450,16 +116,11 @@ def generate() -> str:
             c = _contract(fn)
             if c:
                 out.append(f"{c}")
-            out.append(f"- **100 TB:** {note}")
             if used:
                 out.append(f"- **Used by queries/:** {', '.join(used)}")
             if tst:
                 out.append(f"- **Tests:** {', '.join(tst)}")
             out.append("")
-    stale = set(SCALE_NOTES) - seen_notes
-    if stale:
-        raise SystemExit(
-            f"SCALE_NOTES references vanished operators: {sorted(stale)}")
     return "\n".join(out) + "\n"
 
 
