@@ -17,14 +17,20 @@ the date partitions the new trips touch.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_spark.functions.geo import haversine_km
 from data_warehouse_spark.functions.timeutils import to_local
+from data_warehouse_spark.io import require_schema
 from data_warehouse_spark.operators.merge import merge_into_partitioned
+
+
+# The bike_status columns build_trips reads (trips_lambda.py:94-106).
+STATUS_SCHEMA = ("bike_id string, provider_id string, lat double, "
+                 "lon double, timestamp timestamp")
 
 
 @dataclass(frozen=True)
@@ -113,10 +119,16 @@ def run_incremental(spark: SparkSession, source_path: str, target_path: str,
                     cfg: TripConfig = TripConfig()) -> None:
     """The daily Lambda run (trips_lambda.py:212-246): scan the sliding
     window, rebuild trips, merge into the fact table keyed on
-    (bike_id, trip_start) — idempotent re-runs, like ON CONFLICT."""
-    status = spark.read.parquet(source_path)
+    (bike_id, trip_start) — idempotent re-runs, like ON CONFLICT.
+
+    The log (dt-partitioned, or a plain parquet directory) is read with
+    the columns build_trips needs declared (STATUS_SCHEMA), so the read
+    runs no schema-inference job; the files of the scanned partitions
+    are checked against them first (io.require_schema)."""
+    status = spark.read.schema(STATUS_SCHEMA).parquet(source_path)
     ts_filter = ((F.col("timestamp") >= F.lit(window_start))
                  & (F.col("timestamp") < F.lit(window_end)))
+    scanned = [source_path]
     if "dt" in status.columns:
         # partition pruning needs a predicate on the PARTITION column —
         # Spark cannot derive dt bounds from the timestamp filter, so
@@ -124,8 +136,11 @@ def run_incremental(spark: SparkSession, source_path: str, target_path: str,
         # of the table (O(table), not the promised O(1 day))
         ts_filter = ts_filter & F.col("dt").between(
             window_start.date(), window_end.date())
-    status = status.filter(ts_filter)
-    new_trips = build_trips(status, cfg)
+        days = (window_end.date() - window_start.date()).days
+        scanned = [f"{source_path}/dt={window_start.date() + timedelta(d)}"
+                   for d in range(days + 1)]
+    require_schema(spark, scanned, status.drop("dt").schema)
+    new_trips = build_trips(status.filter(ts_filter), cfg)
     # Partition-scoped MERGE (operators/merge.py): only the dt
     # partitions the window's trips fall into are read and rewritten —
     # the daily run costs O(1 day), not O(table), at any fact size.

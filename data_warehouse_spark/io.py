@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -21,45 +22,181 @@ TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The fixture tables' declared schemas, one place for the whole engine
+# (the reference fixes its tables by DDL, SURVEY.md §1.1). A read with
+# a declared schema lists files but opens no footer: an inferring
+# spark.read.parquet(path) runs a footer-reading Spark job first.
+EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
+                 "event_type string, value double, props string")
+TABLE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": ("c_custkey bigint, c_name string, c_nationkey int, "
+                 "c_acctbal double, c_mktsegment string"),
+    "supplier": ("s_suppkey bigint, s_name string, s_nationkey int, "
+                 "s_acctbal double"),
+    "part": ("p_partkey bigint, p_name string, p_brand string, "
+             "p_type string, p_size int, p_retailprice double"),
+    "orders": ("o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+               "o_totalprice double, o_orderdate timestamp_ntz, "
+               "o_orderpriority string"),
+    "lineitem": ("l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+                 "l_linenumber int, l_quantity double, "
+                 "l_extendedprice double, l_discount double, l_tax double, "
+                 "l_returnflag string, l_linestatus string, "
+                 "l_shipdate timestamp_ntz"),
+    "events": EVENTS_SCHEMA,
+    "documents": ("doc_id bigint, text string, lang string, source string, "
+                  "n_chars bigint"),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+# How events.ts may be stored, as Spark scans it: parquet
+# TIMESTAMP(NANOS) as bigint (spark.sql.legacy.parquet.nanosAsLong),
+# TIMESTAMP(MICROS, isAdjustedToUTC=false) as timestamp_ntz, and
+# UTC-adjusted micros as timestamp.
+EVENTS_TS_ENCODINGS = ("bigint", "timestamp_ntz", "timestamp")
+
+# (file, size, mtime) -> {column: Spark type}, filled by parquet_columns.
+# Every merge writes new files, so a long stream would grow it without
+# end: it is emptied when full.
+_FILE_COLUMNS: dict[tuple[str, int, int], dict[str, str]] = {}
+_FILE_COLUMNS_MAX = 10_000
+
+
+def parquet_columns(spark: SparkSession, path: str) -> dict[str, dict[str, str]]:
+    """{file: {column: Spark type}} for every data file under `path` (a
+    parquet file, or a directory read recursively, skipping the hidden
+    `_`/`.` names Spark's reader skips); {} if `path` does not exist.
+
+    The types are what a Spark scan of each file infers (Spark's own
+    footer converter under the session conf), read from the footers on
+    the driver through the Hadoop FS: no Spark job. Each footer is read
+    once per (file, size, mtime)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return {}
+    prefix = len(fs.makeQualified(root).toString())
+    converter = None
+    out = {}
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        st = files.next()
+        hpath = st.getPath()
+        name = hpath.toString()
+        if any(part[:1] == "." or (part[:1] == "_" and "=" not in part)
+               for part in name[prefix:].split("/")):
+            continue
+        key = (name, st.getLen(), st.getModificationTime())
+        cols = _FILE_COLUMNS.get(key)
+        if cols is None:
+            if converter is None:
+                converter = (jvm.org.apache.spark.sql.execution.datasources
+                             .parquet.ParquetToSparkSchemaConverter(
+                                 spark._jsparkSession.sessionState().conf()))
+            footer = jvm.org.apache.parquet.hadoop.ParquetFileReader \
+                .readFooter(conf, hpath)
+            struct = converter.convert(footer.getFileMetaData().getSchema())
+            cols = {f.name: f.dataType.simpleString() for f in
+                    _parse_datatype_json_string(struct.json()).fields}
+            if len(_FILE_COLUMNS) >= _FILE_COLUMNS_MAX:
+                _FILE_COLUMNS.clear()
+            _FILE_COLUMNS[key] = cols
+        out[name] = cols
+    return out
+
+
+def require_schema(spark: SparkSession, paths, schema: StructType,
+                   exact: bool = False) -> None:
+    """Fail loudly unless every parquet file under `paths` stores each
+    field of `schema` with its declared type (with `exact`, and no
+    other column). Missing paths are skipped.
+
+    A read with a declared schema does not look at the files: a column
+    a file lacks reads as NULL, silently, and a column of another type
+    fails only inside a task, or reads widened. This check runs on the
+    driver from footers (parquet_columns), before the read."""
+    want = {f.name: f.dataType.simpleString() for f in schema.fields}
+    for path in paths:
+        for file, have in parquet_columns(spark, path).items():
+            bad = [f"{c} is {have.get(c, 'missing')}, declared {t}"
+                   for c, t in want.items() if have.get(c) != t]
+            if exact:
+                bad += [f"{c} is not declared" for c in have if c not in want]
+            if bad:
+                raise ValueError(f"{file} disagrees with its declared "
+                                 f"schema: {'; '.join(bad)}")
+
+
+def _read_events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
+    """events as stored, read with its declared schema, plus the Spark
+    type its ts column is stored as (one of EVENTS_TS_ENCODINGS)."""
+    path = f"{sf_dir}/events.parquet"
+    files = parquet_columns(spark, path)
+    if not files:
+        raise FileNotFoundError(f"no parquet data at {path}")
+    ts_type = next(iter(files.values())).get("ts")
+    ddl = EVENTS_SCHEMA
+    if ts_type in EVENTS_TS_ENCODINGS:
+        ddl = ddl.replace("ts timestamp", f"ts {ts_type}")
+    raw = spark.read.schema(ddl).parquet(path)
+    require_schema(spark, [path], raw.schema)
+    return raw, ts_type
+
+
+def _require_utc_session(spark: SparkSession) -> None:
+    # The NTZ->TIMESTAMP cast and plain-timestamp literals go through
+    # the SESSION timezone (to_utc_timestamp('UTC') is then an identity
+    # on the instant), so they are only correct because the engine pins
+    # spark.sql.session.timeZone=UTC (session.get_spark). A truly
+    # tz-independent rewrite would still hit DST-gap ambiguity in the
+    # cast, so enforce the precondition loudly instead.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
+        raise RuntimeError(
+            f"events timestamp handling requires session timeZone "
+            f"UTC, got {tz!r} — use session.get_spark() or pin "
+            "spark.sql.session.timeZone=UTC")
+
+
+def normalize_events_ts(spark: SparkSession, raw: DataFrame,
+                        ts_type: str) -> DataFrame:
+    """events.ts, stored as `ts_type`, as plain TIMESTAMP (batch or
+    stream)."""
+    if ts_type == "bigint":
+        # Integer division: ns values ~1.7e18 exceed double's 2^53
+        # exact range, so a float divide would be off by ±1 us.
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # Wall clock is UTC; see _require_utc_session.
+        _require_utc_session(spark)
+        return raw.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
+    return raw
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table; normalizes the events timestamp to TIMESTAMP
-    (with local timezone — the session pins UTC).
+    """Read one fixture table with its declared schema (TABLE_SCHEMAS),
+    so the read runs no Spark job; a file that disagrees with the
+    declared schema fails here (require_schema). Normalizes the events
+    timestamp to TIMESTAMP (with local timezone — the session pins
+    UTC).
 
     The fixture generator has shipped events.ts as both parquet
     TIMESTAMP(NANOS) (scanned as long under
     spark.sql.legacy.parquet.nanosAsLong) and TIMESTAMP(MICROS,
-    isAdjustedToUTC=false) (scanned as TIMESTAMP_NTZ). Both carry UTC
+    isAdjustedToUTC=false) (scanned as TIMESTAMP_NTZ); the encoding is
+    picked from the file's footer, read on the driver. Both carry UTC
     wall-clock values, so both normalize to the same microsecond
     instants DuckDB produces; downstream operators always see plain
     TIMESTAMP and can use unix_micros() arithmetic.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # Integer division: ns values ~1.7e18 exceed double's 2^53
-            # exact range, so a float divide would be off by ±1 us.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Wall clock is UTC. The NTZ->TIMESTAMP cast below goes
-            # through the SESSION timezone (to_utc_timestamp('UTC') is
-            # then an identity on the instant), so this is only correct
-            # because the engine pins spark.sql.session.timeZone=UTC
-            # (session.get_spark). A truly
-            # tz-independent rewrite would still hit DST-gap ambiguity
-            # in the cast, so enforce the precondition loudly instead.
-            tz = spark.conf.get("spark.sql.session.timeZone")
-            if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-                raise RuntimeError(
-                    f"events NTZ normalization requires session timeZone "
-                    f"UTC, got {tz!r} — use session.get_spark() or pin "
-                    "spark.sql.session.timeZone=UTC")
-            df = df.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
-        else:
-            return df
-        # keep original column order
-        df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
+        return normalize_events_ts(spark, *_read_events(spark, sf_dir))
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    require_schema(spark, [path], df.schema)
     return df
 
 
@@ -91,37 +228,26 @@ def scan_events_range(spark: SparkSession, sf_dir: str,
             + delta.microseconds
         return micros * 1000
 
-    def _require_utc_session() -> None:
-        # same invariant load_table enforces loudly: the NTZ cast and
-        # plain-timestamp literals below go through the SESSION
-        # timezone — a non-UTC session would silently shift the range
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-            raise RuntimeError(
-                f"scan_events_range requires session timeZone UTC, got "
-                f"{tz!r} — use session.get_spark() or pin "
-                "spark.sql.session.timeZone=UTC")
-
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = dict(raw.dtypes).get("ts")
+    raw, ts_type = _read_events(spark, sf_dir)
     if ts_type == "bigint":
         raw = raw.filter((F.col("ts") >= F.lit(ns(start_utc)))
                          & (F.col("ts") < F.lit(ns(end_utc))))
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    if ts_type == "timestamp_ntz":
+    elif ts_type == "timestamp_ntz":
         # Filter in the native NTZ domain so PushedFilters reaches the
         # scan (an NTZ literal compares file-native, no cast above it),
         # then normalize to TIMESTAMP exactly like load_table.
-        _require_utc_session()
+        _require_utc_session(spark)
         raw = raw.filter(
             (F.col("ts") >= F.lit(start_utc).cast("timestamp_ntz"))
             & (F.col("ts") < F.lit(end_utc).cast("timestamp_ntz")))
-        raw = raw.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
-        return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    _require_utc_session()
-    return raw.filter((F.col("ts") >= F.lit(start_utc).cast("timestamp"))
-                      & (F.col("ts") < F.lit(end_utc).cast("timestamp")))
+    else:
+        # same invariant: plain-timestamp literals go through the
+        # SESSION timezone — a non-UTC session would silently shift
+        # the range
+        _require_utc_session(spark)
+        raw = raw.filter((F.col("ts") >= F.lit(start_utc).cast("timestamp"))
+                         & (F.col("ts") < F.lit(end_utc).cast("timestamp")))
+    return normalize_events_ts(spark, raw, ts_type)
 
 
 def spread_for_compute(df: DataFrame) -> DataFrame:

@@ -25,8 +25,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from data_warehouse_spark.io import require_schema
 
 # Caller-supplied key/order/attr names resolve through qcol: dots (or
 # backticks) in a name must reference a PLAIN column, not struct access
@@ -280,10 +282,19 @@ def merge_into_partitioned(spark, target_path: str, new: DataFrame,
     """The 100 TB upsert: MERGE `new` into a dt-partitioned parquet
     table rewriting ONLY the date partitions `new` touches.
 
-    1. the affected dates are computed from `new` (a tiny distinct);
+    1. the batch is evaluated ONCE, by an eager localCheckpoint; an
+       Observation on that same job returns the dates it touches
+       (collect_set of dt, plus a NULL-dt flag), so no job runs only to
+       learn them, and the stream's foreachBatch batch (a stateful
+       dedup upstream) is not recomputed for the write;
     2. only those partitions of the target are read back (partition
-       pruning — O(days touched), not O(table));
-    3. upsert(old_slice, new) writes back through overwrite_partitions
+       pruning — O(days touched), not O(table)), with the batch's own
+       schema: the merge is the target's only writer, so the read needs
+       no schema-inference job. Their files are first checked against
+       that schema on the driver (io.require_schema): a file with a
+       missing, mistyped or undeclared column fails the merge instead
+       of reading as NULLs and being rewritten without it;
+    3. upsert(old_slice, batch) writes back through overwrite_partitions
        (dynamic partition overwrite), so untouched partitions' files
        are never rewritten, and each rewritten date lands as one file
        sorted by `keys` (split only when a date outgrows AQE's advisory
@@ -309,11 +320,15 @@ def merge_into_partitioned(spark, target_path: str, new: DataFrame,
     to upsert) — the deterministic form of the reference's
     last-writer-wins ON CONFLICT DO UPDATE.
     """
-    new_dt = new.withColumn("dt", F.to_date(_qcol(ts_col)))
-    # bounded driver-side list: one entry per calendar day touched by
-    # the batch (the reference's window is 1-2 days); guard so a
-    # mis-typed ts_col can't explode it into a per-row collect
-    dates = [r.dt for r in new_dt.select("dt").distinct().limit(10_001).collect()]
+    touched = Observation()
+    batch = (new.withColumn("dt", F.to_date(_qcol(ts_col)))
+             .observe(touched, F.collect_set("dt").alias("dates"),
+                      F.bool_or(F.col("dt").isNull()).alias("null_dt"))
+             .localCheckpoint(eager=True))
+    # one entry per calendar day touched (the reference's window is 1-2
+    # days); a batch spanning more is a full-table rewrite, refused
+    seen = touched.get
+    dates, null_dt = seen["dates"], bool(seen["null_dt"])
     if len(dates) > 10_000:
         raise ValueError(
             f"merge batch touches >10000 distinct {ts_col} dates; "
@@ -325,21 +340,25 @@ def merge_into_partitioned(spark, target_path: str, new: DataFrame,
     # new-rows-only, and the dynamic partition overwrite then silently
     # dropped the old rows of every touched partition.
     if target_exists(spark, target_path):
+        parts = [str(d) for d in dates] + \
+            ["__HIVE_DEFAULT_PARTITION__"] * null_dt
+        require_schema(spark, [f"{target_path}/dt={p}" for p in parts],
+                       batch.drop("dt").schema, exact=True)
         # NULL-dt (null ts) rows land in the default partition; isin()
         # never matches NULL, so without the explicit isNull branch the
         # dynamic overwrite would rewrite that partition from the new
         # rows alone and silently drop every stored NULL-ts row
-        dt_filter = F.col("dt").isin([d for d in dates if d is not None])
-        if any(d is None for d in dates):
+        dt_filter = F.col("dt").isin(dates)
+        if null_dt:
             dt_filter = dt_filter | F.col("dt").isNull()
-        old = spark.read.parquet(target_path).filter(dt_filter)
-        merged = upsert(old, new_dt.select(*[_qcol(c) for c in old.columns]),
-                        keys=keys, order_col=ts_col)
+        old = spark.read.schema(batch.schema).parquet(target_path) \
+            .filter(dt_filter)
+        merged = upsert(old, batch, keys=keys, order_col=ts_col)
     else:
         # First load obeys the same last-writer-wins contract as the
         # merge path: an initial batch carrying a key twice must land
         # one row, not persist both until the key is re-delivered.
-        merged = dedup_latest(new_dt, keys, ts_col)
+        merged = dedup_latest(batch, keys, ts_col)
 
     overwrite_partitions(merged, target_path, keys=keys)
 

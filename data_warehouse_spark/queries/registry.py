@@ -65,7 +65,11 @@ def register(name: str, oracle: str | None = None, doc: str = "",
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (idempotent) and return the registry
-    in registration order."""
+    in _QUERY_MODULES order, each module's queries in the order it
+    registers them. Registration order alone would depend on which
+    module a caller happened to import first."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    return dict(QUERIES)
+    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    return dict(sorted(QUERIES.items(),
+                       key=lambda kv: rank[kv[1].fn.__module__]))

@@ -11,10 +11,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Sized for the local[32] test harness; on a 1000-executor cluster,
-# shuffle.partitions should be ~2-3x total cores (AQE coalesces down),
-# e.g. spark.sql.shuffle.partitions=8000 with adaptive enabled.
-LOCAL_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+def default_shuffle_partitions() -> int:
+    """One shuffle partition per local task slot: SPARK_GRAFT_CPUS, or
+    else the core count. AQE coalesces batch shuffles below this, but a
+    stateful stream's state store cannot coalesce: it runs exactly
+    spark.sql.shuffle.partitions tasks per micro-batch. A stream's
+    checkpoint records the count it started with, and a restart from
+    that checkpoint keeps it whatever the session says. On a cluster,
+    size it to ~2-3x total cores (e.g. 8000 on 1000 executors), AQE on.
+    """
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+LOCAL_SHUFFLE_PARTITIONS = default_shuffle_partitions()
 
 # Arrow batch size: Spark's default maxBytesPerBatch (64 MiB) bounds
 # wide rows, this record cap bounds narrow ones.
@@ -63,6 +73,9 @@ def get_spark(app_name: str = "data_warehouse_spark", master: str | None = None,
         which Spark has no native type for; we scan it as long and
         convert to microsecond timestamps in the loader (lossless here,
         and the conversion is a cheap codegen'd projection).
+      - zstd parquet: the merge rewrites whole date partitions on every
+        run, so bytes written per run follow the codec; zstd writes
+        fewer than the default snappy.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -76,6 +89,7 @@ def get_spark(app_name: str = "data_warehouse_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_DEFAULT))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Bucketed-sorted tables (operators/bucketing.py) are written
         # with exactly one file per bucket, the regime where trusting
         # the write-time sort is safe — lets the planner drop the
@@ -99,7 +113,8 @@ def get_spark(app_name: str = "data_warehouse_spark", master: str | None = None,
 #  - fact/log tables are written partitioned by date (see io.write_table):
 #    incremental 24h re-scans (reference trips_lambda.py:106,221) become
 #    partition pruning instead of index scans.
-#  - spark.sql.shuffle.partitions scales with cores; AQE coalesces.
+#  - spark.sql.shuffle.partitions scales with cores
+#    (default_shuffle_partitions); AQE coalesces.
 #  - broadcast threshold left at default 10 MB; dimension tables (region,
 #    nation, supplier at TPC-H shape) stay broadcastable at any SF since
 #    dims grow ~log of fact size; explicit broadcast() hints are used in

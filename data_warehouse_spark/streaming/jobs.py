@@ -25,12 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from data_warehouse_spark.io import (
+    EVENTS_SCHEMA, EVENTS_TS_ENCODINGS, normalize_events_ts, parquet_columns,
+)
 from data_warehouse_spark.operators.merge import merge_into_partitioned
 
-# single source of truth for the streaming events schema;
-# read_events_stream swaps the ts declaration per fixture encoding
-EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                 "event_type string, value double, props string")
+# EVENTS_SCHEMA is re-exported for stream readers outside the engine
+# (warehouse_bench's event stream); read_events_stream swaps its ts
+# declaration per fixture encoding
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str,
@@ -61,16 +63,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     e.g. glob="*.parquet" over a directory of staged event files to
     stream them one file per trigger, as read_documents_stream does.
 
-    Streaming sources need an explicit schema, so peek at one file the
-    glob matches with a batch read to learn which physical ts encoding
+    Streaming sources need an explicit schema, so read the footer of one
+    file the glob matches, on the driver, to learn which physical ts encoding
     this fixture generation shipped (TIMESTAMP(NANOS)->long under the
     legacy conf, or TIMESTAMP(MICROS) NTZ), then normalize to plain
-    TIMESTAMP exactly like io.load_table so every streaming job sees
+    TIMESTAMP with io.load_table's own step, so every streaming job sees
     the same event-time column as the batch plans."""
-    ts_type = dict(spark.read.parquet(_first_match(spark, sf_dir, glob))
-                   .dtypes)["ts"]
-    ts_decl = {"bigint": "long", "timestamp_ntz": "timestamp_ntz"}.get(
-        ts_type, "timestamp")
+    cols = parquet_columns(spark, _first_match(spark, sf_dir, glob))
+    ts_type = next(iter(cols.values()))["ts"]
+    ts_decl = ts_type if ts_type in EVENTS_TS_ENCODINGS else "timestamp"
     raw = (spark.readStream.format("parquet")
            .schema(EVENTS_SCHEMA.replace("ts timestamp", f"ts {ts_decl}"))
            .option("maxFilesPerTrigger", max_files)
@@ -78,21 +79,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
            # out the event files from it
            .option("pathGlobFilter", glob)
            .load(f"{sf_dir}/"))
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        # Correct only under the engine's pinned session timeZone=UTC —
-        # the NTZ->TIMESTAMP cast uses the session tz and
-        # to_utc_timestamp('UTC') is an identity on the instant; see the
-        # guarded batch twin in io.load_table.
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-            raise RuntimeError(
-                f"events NTZ normalization requires session timeZone "
-                f"UTC, got {tz!r} — use session.get_spark() or pin "
-                "spark.sql.session.timeZone=UTC")
-        return raw.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
-    return raw
+    return normalize_events_ts(spark, raw, ts_type)
 
 
 def _first_match(spark: SparkSession, dir_path: str, glob: str) -> str:

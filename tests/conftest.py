@@ -22,3 +22,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def jobs_submitted(spark):
+    """() -> number of Spark jobs submitted so far in the session (the
+    scheduler's next job id): the difference around a call is the
+    number of jobs it ran."""
+    sched = spark._jsc.sc().dagScheduler()
+
+    def count() -> int:
+        nxt = sched.nextJobId()       # AtomicInteger, or its value
+        return nxt if isinstance(nxt, int) else nxt.get()
+    return count

@@ -7,9 +7,13 @@ import datetime as dt
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import Row
 
 from data_warehouse_spark.etl.trips import TripConfig, build_trips, run_incremental
+from data_warehouse_spark.io import write_partitioned
 
 
 def _status_rows():
@@ -58,6 +62,31 @@ def test_run_incremental_idempotent(spark):
     second = spark.read.parquet(dst).collect()
     assert len(first) == len(second) == 1
     assert first[0].asDict() == second[0].asDict()
+
+
+@pytest.mark.parametrize("lat, error", [
+    (None, "lat is missing, declared double"),
+    (pa.array(["47.0"]), "lat is string, declared double"),
+])
+def test_run_incremental_rejects_log_files_that_disagree(spark, tmp_path,
+                                                        lat, error):
+    """The log is read with the columns build_trips needs declared; a
+    file in a scanned partition that lacks one (it would read as NULLs
+    and silently drop trips) or stores it as another type fails the run
+    before the merge writes anything."""
+    src, dst = str(tmp_path / "status"), str(tmp_path / "trips")
+    write_partitioned(spark.createDataFrame(_status_rows()), src,
+                      ts_col="timestamp")
+    cols = {"bike_id": ["m2"], "provider_id": ["p"], "lon": [8.0],
+            "timestamp": pa.array([dt.datetime(2024, 3, 1, 11)],
+                                  pa.timestamp("us", "UTC"))}
+    if lat is not None:
+        cols["lat"] = lat
+    pq.write_table(pa.table(cols), f"{src}/dt=2024-03-01/planted.parquet")
+    with pytest.raises(ValueError, match=error):
+        run_incremental(spark, src, dst, dt.datetime(2024, 3, 1),
+                        dt.datetime(2024, 3, 2))
+    assert not (tmp_path / "trips").exists()
 
 
 def test_e3_enriched_trips_schema_and_semantics(spark, sf_dir):

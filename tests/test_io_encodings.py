@@ -103,3 +103,37 @@ def test_streaming_source_event_time_matches_batch(spark):
     got = spark.sql("SELECT * FROM enc_minmax").collect()[0]
     assert got.lo == batch_minmax.lo
     assert got.hi == batch_minmax.hi
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_load_table_runs_no_spark_job(spark, tmp_path, jobs_submitted, unit):
+    """The ts encoding comes from the footer, read on the driver; the
+    read itself has a declared schema, so nothing infers one."""
+    d = _write_events(str(tmp_path), unit)
+    before = jobs_submitted()
+    load_table(spark, d, "events")
+    scan_events_range(spark, d, "2024-01-01T00:00:00", "2024-07-01T00:00:00")
+    assert jobs_submitted() == before
+
+
+@pytest.mark.parametrize("table, columns, error", [
+    ("region", {"r_regionkey": pa.array([1], pa.int32())},
+     "r_name is missing, declared string"),
+    ("region", {"r_regionkey": pa.array([1], pa.int64()), "r_name": ["A"]},
+     "r_regionkey is bigint, declared int"),
+    ("events", {"event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([ROWS[0][1]], pa.timestamp("us")),
+                "user_id": ["u1"], "event_type": ["click"],
+                "value": [1.0], "props": ["{}"]},
+     "user_id is string, declared bigint"),
+])
+def test_load_table_rejects_a_file_that_disagrees(spark, tmp_path, table,
+                                                 columns, error):
+    """A declared-schema read would return a missing column as NULLs;
+    a fixture file that disagrees with its declared schema fails the
+    load instead, naming the file and the column."""
+    d = tmp_path / f"{table}.parquet"
+    d.mkdir()
+    pq.write_table(pa.table(columns), str(d / "part-1.parquet"))
+    with pytest.raises(ValueError, match=error):
+        load_table(spark, str(tmp_path), table)

@@ -73,6 +73,8 @@ def test_a12_null_ts_and_null_type_match_oracle_semantics(spark, tmp_path):
     join (eqNullSafe) instead of being dropped."""
     import datetime as dt
 
+    from pyspark.sql import functions as F
+
     from data_warehouse_spark.queries.warehouse import a12_sketch_rollup
 
     t0 = dt.datetime(2024, 1, 1, 12, 0)
@@ -81,7 +83,12 @@ def test_a12_null_ts_and_null_type_match_oracle_semantics(spark, tmp_path):
             (None, t0, 4), (None, None, 5)]   # NULL type group survives
     df = spark.createDataFrame(
         rows, "event_type string, ts timestamp, user_id long")
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    # planted with the full declared events schema (io.EVENTS_SCHEMA):
+    # load_table refuses a file that lacks a declared column
+    df.select(F.monotonically_increasing_id().alias("event_id"), "ts",
+              "user_id", "event_type", F.lit(1.0).alias("value"),
+              F.lit("{}").alias("props")) \
+        .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     out = {r.event_type: r for r in
            a12_sketch_rollup(spark, str(tmp_path)).collect()}
     assert set(out) == {"click", None}       # NULL group kept

@@ -983,6 +983,71 @@ def test_merge_into_partitioned_first_load_dedups_batch(spark, tmp_path):
     assert got == {(1, "latest"), (2, "b")}
 
 
+def test_merge_into_partitioned_evaluates_batch_once(spark, tmp_path):
+    """The merge materialises its batch once and takes the touched
+    dates from that same job: a counting UDF in the batch sees each
+    row once per merge, on the first load and on a merge into an
+    existing target (a distinct-dates collect before the write would
+    evaluate the batch twice)."""
+    import datetime as dt
+
+    from data_warehouse_spark.operators.merge import merge_into_partitioned
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(ts):
+        seen.add(1)
+        return ts
+
+    counted = F.udf(count, "timestamp").asNondeterministic()
+    t0 = dt.datetime(2024, 1, 10, 12)
+    rows = [Row(event_id=i, ts=t0 + dt.timedelta(hours=6 * i), v="a")
+            for i in range(6)]          # spans two dates
+    batch = spark.createDataFrame(rows, "event_id long, ts timestamp, v string")
+    target = str(tmp_path / "t")
+    for _ in range(2):
+        before = seen.value
+        merge_into_partitioned(spark, target, batch.withColumn("ts", counted("ts")),
+                               keys=["event_id"], ts_col="ts")
+        assert seen.value - before == len(rows)
+    assert spark.read.parquet(target).count() == len(rows)
+
+
+@pytest.mark.parametrize("planted, error", [
+    ({"event_id": [2]}, "v is missing, declared string"),
+    ({"event_id": [2], "v": [7]}, "v is bigint, declared string"),
+    ({"event_id": [2], "v": ["b"], "w": [1]}, "w is not declared"),
+])
+def test_merge_into_partitioned_rejects_target_files_that_disagree(
+        spark, tmp_path, planted, error):
+    """The merge reads its target with the batch's schema; a file in a
+    touched partition that lacks a column, stores it as another type,
+    or carries a column the batch does not have fails the merge before
+    anything is rewritten (read with the batch schema, the first would
+    come back as NULLs and the last would be dropped by the rewrite)."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_spark.operators.merge import merge_into_partitioned
+
+    target = str(tmp_path / "t")
+    t0 = dt.datetime(2024, 1, 10, 12)
+    batch = spark.createDataFrame([Row(event_id=1, ts=t0, v="a")],
+                                  "event_id long, ts timestamp, v string")
+    merge_into_partitioned(spark, target, batch, keys=["event_id"], ts_col="ts")
+    part = os.path.join(target, "dt=2024-01-10")
+    pq.write_table(pa.table(planted | {"ts": pa.array([t0], pa.timestamp("us", "UTC"))}),
+                   os.path.join(part, "planted.parquet"))
+    before = sorted(os.listdir(part))
+    with pytest.raises(ValueError, match=error):
+        merge_into_partitioned(spark, target, batch.withColumn("v", F.lit("b")),
+                               keys=["event_id"], ts_col="ts")
+    assert sorted(os.listdir(part)) == before
+
+
 def test_split_oversized_routes_null_blocks_and_matches_isin(spark):
     """The broadcast-join split must route an oversized NULL-keyed
     block to the prefilter path — the old isin() literal filter never
@@ -1272,8 +1337,13 @@ def test_a8_median_envelope_holds_for_tiny_groups(spark, tmp_path):
             # verdict must be literal TRUE (coalesce guard), never NULL
             ("scroll", 4, None), ("scroll", 5, None)]
     df = spark.createDataFrame(
-        rows, "event_type string, user_id int, value double")
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+        rows, "event_type string, user_id long, value double")
+    # planted with the full declared events schema (io.EVENTS_SCHEMA):
+    # load_table refuses a file that lacks a declared column
+    df.select(F.monotonically_increasing_id().alias("event_id"),
+              F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
+              "user_id", "event_type", "value", F.lit("{}").alias("props")) \
+        .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     out = {r.event_type: r for r in a8_approx_agg(spark, str(tmp_path)).collect()}
     assert out["click"].median_within_rank_bound is True
     assert out["view"].median_within_rank_bound is True
